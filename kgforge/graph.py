@@ -77,10 +77,10 @@ def pagerank_scaled(
 
     All BIGINT floor arithmetic — no float accumulation, so the result is
     independent of partitioning and engine. Scale shape (q88 docstring has
-    the full argument): edges/degrees built once and persisted (at real
-    scale: checkpointed to break per-iteration lineage growth); each
-    iteration is one co-partitioned equi-join + one partial-agg shuffle on
-    dst — the pregel-on-DataFrames shape. The driver loop builds plans,
+    the full argument): edges/degrees built once and persisted for the
+    loop, released once the result is checkpointed; each iteration is one
+    co-partitioned equi-join + one partial-agg shuffle on dst — the
+    pregel-on-DataFrames shape. The driver loop builds plans,
     never touches rows.
     """
     num, den = damping
@@ -106,16 +106,11 @@ def pagerank_scaled(
                 F.lit(base) + F.expr(f"({num} * coalesce(s, 0)) div {den}")
             ).alias("r"),
         )
-    # NOTE on cache lifetime (r7): edges/deg stay persisted — the pregel
-    # contract is build-once, iterate-many, and within one session a
-    # repeated invocation over the same graph resumes from the resident
-    # edge list (CacheManager matches the identical logical plan), which
-    # is how a production iterate-over-static-graph job runs. The leak is
-    # bounded (one edge list + one degree table per distinct graph); the
-    # per-call leaks VERDICT r6 flagged (k_core empty path, LPA edges,
-    # q97/q99 pairs, PPR) are the ones released eagerly, because their
-    # results are checkpointed and never re-derive from the cache.
-    return r
+    # materialize, then free the caches
+    out = r.localCheckpoint(eager=True)
+    deg.unpersist()
+    edges.unpersist()
+    return out
 
 
 def personalized_pagerank_scaled(

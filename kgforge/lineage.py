@@ -16,6 +16,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kgforge.materialize import read_parquet_if_exists
+
 
 def fingerprint_expr(*cols: str) -> F.Column:
     """Order-insensitive partition fingerprint: bit_xor of per-row xxhash64.
@@ -48,9 +50,8 @@ def lineage_rows(
 
 def completed_parts(spark: SparkSession, lineage_path: str, stage: str) -> DataFrame | None:
     """part_ids already committed for ``stage`` (None if no lineage yet)."""
-    try:
-        lin = spark.read.parquet(lineage_path)
-    except Exception:
+    lin = read_parquet_if_exists(spark, lineage_path)
+    if lin is None:
         return None
     return lin.filter(F.col("stage") == stage).select("part_id").distinct()
 

@@ -26,13 +26,31 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_PARTS = 64
 
 # "parquet" (sandbox default) or "iceberg" (real cluster w/ catalog).
 TABLE_FORMAT = os.environ.get("KGFORGE_TABLE_FORMAT", "parquet")
+
+
+def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+    """``spark.read.parquet(path)``, or None when the path does not exist.
+
+    Only "path does not exist" means "nothing committed yet". Schema drift,
+    a corrupt footer or a transient FS error must propagate: swallowing
+    them turns a damaged table into a silent rebuild or, for an upsert, a
+    dynamic overwrite that deletes the rows already there (code-review r5).
+    """
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
+            return None
+        raise
 
 
 def with_part_id(df: DataFrame, key_cols: list[str], n_parts: int = DEFAULT_PARTS) -> DataFrame:
@@ -142,19 +160,10 @@ def upsert_partitioned(
     changes = with_part_id(changes, key_cols, n_parts)
     out_cols = key_cols + value_cols + [part_col]
 
-    # ONLY a missing table means "first write". A bare except here would
-    # turn schema drift, a corrupt footer, or a transient FS error into a
-    # dynamic overwrite that silently DELETES every pre-existing row in
-    # the touched partitions (code-review r5) — those must propagate.
-    from pyspark.errors import AnalysisException
-
-    try:
-        target_raw = spark.read.parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            target_raw = None
-        else:
-            raise
+    # ONLY a missing table means "first write" (see read_parquet_if_exists):
+    # anything else here would become a dynamic overwrite that silently
+    # DELETES every pre-existing row in the touched partitions.
+    target_raw = read_parquet_if_exists(spark, path)
     if target_raw is None:
         write_partitioned(
             changes.select(*out_cols), path, part_col,

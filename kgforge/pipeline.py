@@ -123,27 +123,29 @@ def run_extraction(
     rows = lineage.lineage_rows(
         written, STAGE_MENTIONS, MENTION_CONTENT_COLS
     ).persist()
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_audit = pool.submit(audit_mention_ids, written)
-        f_rows = pool.submit(rows.count)
-        f_rows.result()
-        f_audit.result()  # raises on collision BEFORE any lineage append
-    # zero-mention partitions: emit count-0 rows via anti-join
-    universe = spark.createDataFrame(
-        [(int(p),) for p in part_ids], "part_id int"
-    )
-    empty = (
-        universe.join(rows.select("part_id"), "part_id", "left_anti")
-        .select(
-            F.lit(STAGE_MENTIONS).alias("stage"),
-            F.col("part_id").cast("int"),
-            F.lit(0).cast("long").alias("n_rows"),
-            F.lit("0" * 16).alias("fingerprint"),
-            F.lit(int(t0 * 1000)).alias("wall_ms"),
+    try:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            f_audit = pool.submit(audit_mention_ids, written)
+            f_rows = pool.submit(rows.count)
+            f_rows.result()
+            f_audit.result()  # raises on collision BEFORE any lineage append
+        # zero-mention partitions: emit count-0 rows via anti-join
+        universe = spark.createDataFrame(
+            [(int(p),) for p in part_ids], "part_id int"
         )
-    )
-    lineage.append_lineage(rows.unionByName(empty), paths.lineage)
-    rows.unpersist()
+        empty = (
+            universe.join(rows.select("part_id"), "part_id", "left_anti")
+            .select(
+                F.lit(STAGE_MENTIONS).alias("stage"),
+                F.col("part_id").cast("int"),
+                F.lit(0).cast("long").alias("n_rows"),
+                F.lit("0" * 16).alias("fingerprint"),
+                F.lit(int(t0 * 1000)).alias("wall_ms"),
+            )
+        )
+        lineage.append_lineage(rows.unionByName(empty), paths.lineage)
+    finally:
+        rows.unpersist()  # the collision-abort path releases it too
 
 
 STAGE_GRAPH_INPUT = "graph_input"
@@ -165,6 +167,24 @@ def _mentions_fingerprint(spark: SparkSession, paths: KGPaths) -> str:
     return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
 
+def _graph_input_committed(
+    spark: SparkSession, paths: KGPaths, input_fp: str | None = None
+) -> bool:
+    """True iff lineage records a graph build from EXACTLY the mention-table
+    state ``input_fp`` (default: the current one). A missing lineage table
+    means no build; any other read failure propagates."""
+    lin = materialize.read_parquet_if_exists(spark, paths.lineage)
+    if lin is None:
+        return False
+    fp = input_fp or _mentions_fingerprint(spark, paths)
+    return (
+        lin.filter(
+            (F.col("stage") == STAGE_GRAPH_INPUT) & (F.col("fingerprint") == fp)
+        ).count()
+        > 0
+    )
+
+
 def _canon_map_path(paths: KGPaths) -> str:
     """The canon-map artifact lives beside the mention table (the batch's
     work dir), since it is derived from exactly that mention state."""
@@ -173,12 +193,16 @@ def _canon_map_path(paths: KGPaths) -> str:
 
 def build_canon_map(
     mentions: DataFrame, link_threshold: float = link.DEFAULT_THRESHOLD
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """Distinct surface forms -> canonical surface, via typed MinHash-LSH
     linking + connected components. Shared by run_graph (triple
     canonicalization) and entity_salience (graph vertex identity), so both
     agree on entity boundaries. Runs over DISTINCT (entity_type,
-    norm_surface) — see run_graph's scale note."""
+    norm_surface) — see run_graph's scale note.
+
+    Returns ``(canon_map, surfaces)``. ``canon_map`` is lazy and reads the
+    persisted ``surfaces``; the caller unpersists ``surfaces`` once the
+    map's last consumer has run."""
     # r7: persist the distinct-surface relation — it is referenced by the
     # linker (numeric + textual branches), the CC active/isolated split,
     # and canonical_surfaces (members + canon), so without the cache the
@@ -193,9 +217,10 @@ def build_canon_map(
     )
     edges = link.typed_link_surfaces(surfaces, threshold=link_threshold)
     assign = canon.connected_components(surfaces.select("mention_id"), edges)
-    return canon.canonical_surfaces(assign, surfaces).select(
+    canon_map = canon.canonical_surfaces(assign, surfaces).select(
         "entity_type", "norm_surface", "canon_surface"
     )
+    return canon_map, surfaces
 
 
 def entity_salience(
@@ -239,23 +264,22 @@ def _fresh_canon_map(spark, paths: KGPaths, link_threshold: float):
     """Reuse run_graph's committed canon_map when it was built from EXACTLY
     this mention-table state (same fingerprint discipline as the graph
     phase's resume short-circuit); otherwise rebuild. Avoids a second
-    LSH + CC pass in the common run_kg --salience/--related flow."""
-    try:
-        lin = spark.read.parquet(paths.lineage)
-        fresh = (
-            lin.filter(
-                (F.col("stage") == STAGE_GRAPH_INPUT)
-                & (F.col("fingerprint") == _mentions_fingerprint(spark, paths))
-            ).count()
-            > 0
+    LSH + CC pass in the common run_kg --salience/--related flow.
+
+    A rebuilt map is checkpointed so its consumers read it the way they
+    read the committed artifact, and its surface cache is released."""
+    if _graph_input_committed(spark, paths):
+        committed = materialize.read_parquet_if_exists(
+            spark, _canon_map_path(paths)
         )
-        if fresh:
-            return spark.read.parquet(_canon_map_path(paths))
-    except Exception:
-        pass
-    return build_canon_map(
+        if committed is not None:
+            return committed
+    canon_map, surfaces = build_canon_map(
         spark.read.parquet(paths.mentions), link_threshold=link_threshold
     )
+    canon_map = canon_map.localCheckpoint(eager=True)
+    surfaces.unpersist()
+    return canon_map
 
 
 def _entity_comention_pairs(spark, paths: KGPaths, link_threshold: float):
@@ -374,25 +398,13 @@ def run_graph(
     at the end (AQE skew-join handles hot surface keys).
     """
     input_fp = _mentions_fingerprint(spark, paths)
-    if resume:
-        # short-circuit: if the graph was already built from EXACTLY this
-        # mention-table state, the committed triple table is current.
-        try:
-            lin = spark.read.parquet(paths.lineage)
-            done = (
-                lin.filter(
-                    (F.col("stage") == STAGE_GRAPH_INPUT)
-                    & (F.col("fingerprint") == input_fp)
-                ).count()
-                > 0
-            )
-        except Exception:
-            done = False
-        if done:
-            return spark.read.parquet(paths.triples)
+    # short-circuit: if the graph was already built from EXACTLY this
+    # mention-table state, the committed triple table is current.
+    if resume and _graph_input_committed(spark, paths, input_fp):
+        return spark.read.parquet(paths.triples)
 
     mentions = spark.read.parquet(paths.mentions)
-    canon_map = build_canon_map(mentions, link_threshold=link_threshold)
+    canon_map, surfaces = build_canon_map(mentions, link_threshold=link_threshold)
 
     # The canonicalization decision is itself an artifact: persist it so
     # (a) entity resolution is auditable after the fact and (b) downstream
@@ -401,6 +413,7 @@ def run_graph(
     # map's size (distinct surfaces only). Reading it back also means the
     # triple join consumes the committed artifact, not a recomputation.
     canon_map.write.mode("overwrite").parquet(_canon_map_path(paths))
+    surfaces.unpersist()  # the write above was the map's last consumer
     canon_map = spark.read.parquet(_canon_map_path(paths))
 
     canonical = mentions.join(canon_map, ["entity_type", "norm_surface"])

@@ -2,7 +2,7 @@
 
 One named query per implemented operator family from SURVEY.md §2, each a
 ``(spark_fn, oracle_sql)`` pair over the driver's read-only parquet tables.
-Cross-engine determinism rules used throughout (see tools/check_oracles.py):
+Cross-engine determinism rules used throughout (compared by oracle_gate.py):
 
 - double SUMs go through decimal casts (exact, order-insensitive) and back
   to double; AVG/STDDEV outputs are rounded symmetrically on both sides;
@@ -13,13 +13,12 @@ Cross-engine determinism rules used throughout (see tools/check_oracles.py):
 
 Package layout (split from the 3,300-line monolith in round 5, VERDICT r4
 #8 — every (fn, sql) pair unchanged; importing this package registers every
-query and applies the driver-snapshot rotation, exactly as the monolith's
-import did):
+query, in definition order):
 
 - ``core``       registry spine: Q, REGISTRY, @q, t(), exact-sum helpers
 - ``relational`` q01-q17 (TPC-H-ish aggs, windows, joins, top-k)
-- ``dedup``      q18-q24/q41/q45/q46/q50/q55/q68 (hashing, MinHash-LSH,
-                 SimHash, sampling, packing, global shuffle)
+- ``dedup``      q18-q24/q45/q50/q68 (hashing, MinHash-LSH, SimHash,
+                 sampling, packing, global shuffle)
 - ``corpus``     q25-q28/q47-q48/q52-q54/q56-q65/q67/q69-q75 (range joins,
                  mixing, quantization, decontam, sketches, CDC, funnel)
 - ``vectors``    q29-q31/q43/q44 (cosine top-k, IVF, k-means)
@@ -27,8 +26,8 @@ import did):
                  scorecards, the KG pipeline itself)
 - ``graph_temporal`` q84/q85/q87-q89 (SCD2 history, priority sampling,
                  deletion-neighborhood linking, PageRank, triangles)
-- ``rotation``   deterministic driver-snapshot rotation (pinned first,
-                 stalest-verified next)
+- ``oracle_gate`` the Spark-vs-DuckDB comparison behind
+                 tests/test_oracles.py and tools/check_oracles.py
 """
 
 from __future__ import annotations
@@ -43,7 +42,7 @@ from kgforge.queries.core import (  # noqa: F401
 )
 
 # Importing each module registers its queries into REGISTRY in definition
-# order (the rotation's tie-break). Order here mirrors the old monolith.
+# order. Order here mirrors the old monolith.
 from kgforge.queries import relational as _relational  # noqa: E402,F401
 from kgforge.queries import dedup as _dedup  # noqa: E402,F401
 from kgforge.queries.dedup import (  # noqa: F401
@@ -60,12 +59,3 @@ from kgforge.queries.pipeline_q import (  # noqa: F401
     leakage_free_split,
 )
 from kgforge.queries import graph_temporal as _graph_temporal  # noqa: E402,F401
-
-# Rotation LAST: it reorders the now-complete REGISTRY (and fails fast if a
-# pinned name went missing).
-from kgforge.queries.rotation import (  # noqa: E402,F401
-    _PINNED,
-    _last_driver_round,
-    _row_verified,
-    apply_rotation,
-)

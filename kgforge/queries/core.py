@@ -18,21 +18,9 @@ class Q:
 
 REGISTRY: dict[str, Q] = {}
 
-# Bench-only queries: registered here instead of REGISTRY so they keep
-# their benchmark role (bench.py's SimHash md5-vs-xxhash64 A/B legs) and
-# stay callable WITHOUT occupying a driver correctness-rotation slot. The
-# registry is capped at 96 (4 pinned + 2 rounds x 46 rotating under the
-# driver's ~50-row snapshot, see rotation.py); r6 spends the slots these
-# held on hash-gated graph queries instead (VERDICT r5 #3/#4) — a
-# rows-only row for an xxhash64 twin whose md5 sibling is already
-# hash-green (q41/q55 vs q24), or for the unsharded twin of an operator
-# whose scale shape has its own gate (q46 vs q50), was rotation overhead.
-DEMOTED: dict[str, Q] = {}
-
-
-def q(name: str, sql: str | None, driver: bool = True):
+def q(name: str, sql: str | None):
     def deco(fn):
-        (REGISTRY if driver else DEMOTED)[name] = Q(fn, sql)
+        REGISTRY[name] = Q(fn, sql)
         return fn
 
     return deco

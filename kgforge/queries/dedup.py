@@ -1,6 +1,6 @@
 """Documents: hashing, shingles, MinHash-LSH / SimHash dedup, sampling,
 sequence packing, deterministic global shuffle (§2.3, brief ops):
-q18-q24, q41, q45, q46, q50, q55, q68 + pack_sequences/global_shuffle.
+q18-q24, q45, q50, q68 + pack_sequences/global_shuffle.
 
 Split from the monolithic queries.py in round 5 (VERDICT r4 #8);
 every (fn, sql) pair unchanged.
@@ -272,39 +272,6 @@ def q24_simhash(spark, sf_dir):
     )
 
 
-@q("q41_simhash64_fast", None, driver=False)
-def q41_simhash64_fast(spark, sf_dir):
-    """Scale-path SimHash (64-bit, one xxhash64 per token, materialized
-    hash array + scalar folds) — the production twin of q24; rows-only
-    (DuckDB has no xxhash64). Deterministic. Same-window A/B at sf0.1
-    warm (r3 bench artifact): md5 16-bit (q24) 4.76s, xxhash64 16-bit
-    (q55) 1.39s (3.4x), xxhash64 64-bit (this) 4.18s — 4x the width for
-    3x the 16-bit-fast time, still beating md5 at a quarter the width."""
-    d = t(spark, sf_dir, "documents", spread=True)
-    return (
-        textops.with_simhash_fast(d, "text")
-        .groupBy("simhash")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-@q("q55_simhash16_fast", None, driver=False)
-def q55_simhash16_fast(spark, sf_dir):
-    """Same-WIDTH hash A/B twin of q24 (VERDICT r2 next-round #9): 16-bit
-    SimHash with the xxhash64-materialized shape, so q24 (md5 inline, 16
-    folds) vs q55 (xxhash64 precomputed, 16 folds) isolates the HASH cost —
-    q41 is the same scale shape at 64-bit width (4x the fold count) and is
-    not a like-for-like hash comparison. All three run adjacently in
-    bench.py's headline so the A/B lands inside one weather window of one
-    artifact. Rows-only (DuckDB has no xxhash64). Deterministic."""
-    d = t(spark, sf_dir, "documents", spread=True)
-    return (
-        textops.with_simhash_fast(d, "text", bits=16)
-        .groupBy("simhash")
-        .agg(F.count("*").alias("n"))
-    )
-
-
 @q(
     "q45_stratified_sample",
     """
@@ -335,60 +302,6 @@ def q45_stratified_sample(spark, sf_dir):
     )
 
 
-@q(
-    "q46_sequence_packing",
-    # driver=False since r6: the per-lang window here is the UNSHARDED
-    # teaching shape; q50_sequence_packing_sharded is the same operator in
-    # its scale shape with its own hash gate, so this rotation slot was
-    # re-spent on the hash-gated graph queries q97-q99 (VERDICT r5 #3/#4).
-    # Stays callable (tests/plan docs reference its oracle-twin shape).
-    """
-    WITH sized AS (
-        SELECT lang, doc_id, len(string_split(text, ' ')) AS n_tokens
-        FROM documents
-    ), packed AS (
-        SELECT lang, doc_id, n_tokens,
-               floor((sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                      ROWS UNBOUNDED PRECEDING) - n_tokens) / 2048.0)::bigint
-                 AS pack_id
-        FROM sized
-    ), packs AS (
-        SELECT lang, pack_id, count(*) AS n_docs,
-               sum(n_tokens)::bigint AS n_tokens
-        FROM packed GROUP BY lang, pack_id
-    )
-    SELECT lang, count(*) AS n_packs, max(n_tokens) AS max_pack_tokens,
-           round(avg(n_docs), 4) AS avg_docs_per_pack
-    FROM packs GROUP BY lang
-    """,
-    driver=False,
-)
-def q46_sequence_packing(spark, sf_dir):
-    """Sequence packing (context-window assembly for LLM training): docs
-    packed into ~2048-token budgets per language in doc_id order via ONE
-    window cumulative sum — pack_id = floor((cumsum - n)/budget). At scale
-    the window partitions by (lang, shard) so no global sort exists."""
-    d = t(spark, sf_dir, "documents")
-    sized = d.select(
-        "lang", "doc_id", F.size(F.split("text", " ")).alias("n_tokens")
-    )
-    w = Window.partitionBy("lang").orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    packed = sized.withColumn(
-        "pack_id",
-        F.floor((F.sum("n_tokens").over(w) - F.col("n_tokens")) / 2048.0),
-    )
-    packs = packed.groupBy("lang", "pack_id").agg(
-        F.count("*").alias("n_docs"), F.sum("n_tokens").alias("n_tokens")
-    )
-    return packs.groupBy("lang").agg(
-        F.count("*").alias("n_packs"),
-        F.max("n_tokens").alias("max_pack_tokens"),
-        F.round(F.avg("n_docs"), 4).alias("avg_docs_per_pack"),
-    )
-
-
 def pack_sequences(
     docs: DataFrame,
     budget: int = 2048,
@@ -406,7 +319,7 @@ def pack_sequences(
     local id, disjoint within a language because a shard's local ids are
     < 2^40 at any real scale). Two languages sharing a shard reuse the
     same pack_id values, so consumers MUST key on (lang, pack_id) — as
-    q46/q50 do (ADVICE r3).
+    q50 does (ADVICE r3).
     Packing quality is unchanged: a greedy cumsum pack within any doc
     subset still fills ~budget tokens per pack; only WHICH docs share a
     pack differs from the global order (an explicitly order-free contract
@@ -465,7 +378,7 @@ def pack_sequences(
 def q50_sequence_packing_sharded(spark, sf_dir):
     """The sharded (scale-path) packing, oracle-checked: shard = doc_id % 8
     here so DuckDB reproduces the exact assignment; production default is
-    pmod(xxhash64(doc_id), S). q46 keeps the single-window twin."""
+    pmod(xxhash64(doc_id), S)."""
     d = t(spark, sf_dir, "documents")
     packed = pack_sequences(
         d, budget=2048, n_shards=8, shard_col=F.pmod(F.col("doc_id"), F.lit(8))
@@ -483,7 +396,7 @@ def q50_sequence_packing_sharded(spark, sf_dir):
 def global_shuffle(docs: DataFrame, seed: int = 42, key_col: str = "doc_id") -> DataFrame:
     """Deterministic global training-order shuffle (VERDICT r3 #7) — the
     standard LLM-pipeline op of fixing a reproducible corpus order before
-    sequence packing (feeds pack_sequences/q46/q50).
+    sequence packing (feeds pack_sequences/q50).
 
     Order = sort by md5(seed ':' key): a pure function of (seed, row key),
     so the permutation is identical across engines, partition counts, and

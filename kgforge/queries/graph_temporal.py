@@ -13,10 +13,6 @@ the mention/co-purchase graph (the reference's entity graph is built in
 `data_pipeline.py`; PageRank/triangles are the standard salience/cohesion
 measures over it).
 
-Registry note: this batch deliberately fills the registry to its sustainable
-ceiling (96 = 4 pinned + 2 rounds x 46 rotating under the driver's ~50-row
-snapshot cap, see rotation.py); future rounds grow depth, not query count.
-
 Cross-engine determinism: every output column here is either an integer
 (counts, scaled ranks, epoch-ms sums — bit-exact in both engines) or a
 single correctly-rounded double division of exact integer inputs (q85's
@@ -421,8 +417,7 @@ def q89_triangle_count(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # q97-q99 (new r6, VERDICT r5 #3/#4): hash-gated BFS, k-core, personalized
 # PageRank — the three graph capabilities that were pytest-only in r5 get
-# full driver gates, on the rotation slots freed by demoting q41/q55/q46
-# to bench-only (see queries/core.py DEMOTED).
+# full oracle gates.
 # ---------------------------------------------------------------------------
 
 # The raw co-purchase graph (q88/q89) is near-complete at test scale (min

@@ -14,7 +14,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
 
 
 def get_spark(
@@ -55,9 +55,3 @@ def get_spark(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def stop_spark() -> None:
-    """Stop the active session (used by the two-parallelism scaling bench)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -151,11 +151,11 @@ def simhash16(col: Column) -> Column:
     token is hashed 16 times. The production path is
     ``with_simhash16_md5`` (r7): same result, ONE md5 per token with the
     16 digit parities packed into a long that is materialized as a
-    projected array column, then 16 shift/mask folds — the
-    ``with_simhash_fast`` shape. The hoist must be a MATERIALIZED
-    projection (a bound attribute), not a shared subexpression: Catalyst
-    does not CSE across aggregate lambdas, which is why an earlier
-    hoisted-md5-array variant inside one Column expression was 3x slower.
+    projected array column, then 16 shift/mask folds. The hoist must be a
+    MATERIALIZED projection (a bound attribute), not a shared
+    subexpression: Catalyst does not CSE across aggregate lambdas, which
+    is why an earlier hoisted-md5-array variant inside one Column
+    expression was 3x slower.
     IN-list digit parity is bit-identical in DuckDB.
     """
     toks = tokens(col)
@@ -197,7 +197,7 @@ def with_simhash16_md5(
     ANSI overflow), materialized as an array projection. The 16 aggregate
     folds then test the nibble LOW bit at position 4*(15-b) — digit b+1
     of the md5 is odd iff that bit is set — so each fold is shift/mask
-    over a precomputed long, the ``with_simhash_fast`` shape."""
+    over a precomputed long."""
     toks = tokens(F.col(text_col))
     packed = F.transform(
         F.transform(toks, lambda tk: F.md5(tk)),
@@ -235,7 +235,7 @@ def minhash_band_sig_fast(
     AND-combining ``rows_per_band`` independent min-hashes like
     kgforge.link.minhash_blocks. Not DuckDB-expressible — the md5 twin
     (minhash_band_sig) stays the oracle surface; this is what production
-    dedup (q41/q93 path) runs."""
+    dedup (the q93 path) runs."""
     mins = [
         F.array_min(
             F.transform(
@@ -246,97 +246,6 @@ def minhash_band_sig_fast(
         for r in range(rows_per_band)
     ]
     return F.xxhash64(*mins)
-
-
-def with_simhash_fast(
-    df: DataFrame, text_col: str = "text", out: str = "simhash", bits: int = 64
-) -> DataFrame:
-    """Scale-path SimHash: ONE xxhash64 per token, MATERIALIZED as an
-    array<long> projection, then ``bits`` scalar aggregate folds that only
-    shift/mask the precomputed hash (bit b of the token hash votes +/-1).
-
-    Why this exact shape (all measured warm at sf0.1, local[8]):
-    - md5 inline in 16 folds (simhash16, the oracle shape): 5.8 s
-    - xxhash64 + array-accumulator zip_with fold: 11.4 s — allocating a
-      64-int array per token per row dominates
-    - xxhash64 materialized + 64 scalar folds (this): 2.1 s; 16-bit: 0.7 s
-    The materialization matters: Catalyst does not CSE across aggregate
-    lambdas, so the hash array must be a bound attribute from a previous
-    projection or every fold re-hashes every token (the same trap the
-    hoisted-md5 variant hit in round 1).
-
-    r7 lane packing (guide §1.2 step 2): each fold accumulates several
-    bit-counters in 16-bit lanes of one long, so the array is traversed
-    bits/lanes times instead of ``bits`` times — and the per-element cost
-    of a fold is interpreted-expression evaluation (higher-order
-    functions have no codegen), so the lambda body is kept to THREE nodes
-    when the layout allows: for bits a multiple of 16, fold f counts bits
-    {f, f+16, f+32, f+48} and the increment for all lanes at once is
-    ``(h >> f) & 0x0001000100010001`` — one shift, one mask, one add.
-    For narrower signatures (q55's 16-bit) the four lanes are assembled
-    per-lane (bits f, f+4, f+8, f+12). vote_b > 0 becomes
-    2*count_b > n_tokens, bit-identical to the naive folds (A/B-checked).
-    Exactness bound: a 16-bit lane counter is exact for documents under
-    65,536 tokens; a corpus with longer documents shards them upstream
-    (pack_sequences' budget) or widens to 32-bit lanes — same shape.
-    """
-    hashed = df.withColumn(
-        "_simhash_h", F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t))
-    )
-    n_toks = F.size(F.col("_simhash_h"))
-    sig = F.lit(0).cast("long")
-
-    if bits % 16 == 0 and bits >= 32:
-        lanes = bits // 16
-        mask = sum(1 << (16 * j) for j in range(lanes))
-
-        def make_step_masked(f: int):
-            def step(acc, h):
-                return acc + F.shiftright(h, f).bitwiseAND(F.lit(mask))
-
-            return step
-
-        for _f in range(16):
-            acc = F.aggregate(
-                F.col("_simhash_h"), F.lit(0).cast("long"), make_step_masked(_f)
-            )
-            for j in range(lanes):
-                b = _f + 16 * j
-                cnt = F.shiftright(acc, 16 * j).bitwiseAND(F.lit(0xFFFF))
-                sig = sig.bitwiseOR(
-                    F.when(
-                        cnt * 2 > n_toks, F.shiftleft(F.lit(1).cast("long"), b)
-                    ).otherwise(F.lit(0).cast("long"))
-                )
-    else:
-        n_folds = max(1, bits // 4)
-
-        def make_step(idxs: list[int]):
-            def step(acc, h):
-                inc = None
-                for j, b in enumerate(idxs):
-                    term = F.shiftleft(
-                        F.shiftright(h, b).bitwiseAND(F.lit(1)).cast("long"),
-                        16 * j,
-                    )
-                    inc = term if inc is None else inc + term
-                return acc + inc
-
-            return step
-
-        for f in range(n_folds):
-            idxs = [f + j * n_folds for j in range(4) if f + j * n_folds < bits]
-            acc = F.aggregate(
-                F.col("_simhash_h"), F.lit(0).cast("long"), make_step(idxs)
-            )
-            for j, b in enumerate(idxs):
-                cnt = F.shiftright(acc, 16 * j).bitwiseAND(F.lit(0xFFFF))
-                sig = sig.bitwiseOR(
-                    F.when(
-                        cnt * 2 > n_toks, F.shiftleft(F.lit(1).cast("long"), b)
-                    ).otherwise(F.lit(0).cast("long"))
-                )
-    return hashed.withColumn(out, sig).drop("_simhash_h")
 
 
 def stopword_ratio(col: Column) -> Column:

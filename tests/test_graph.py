@@ -99,7 +99,7 @@ def test_bfs_matches_duckdb_recursive_cte(spark):
                 SELECT p2, p1 FROM pairs
             ), walk(node, dist) AS (
                 SELECT * FROM (VALUES (0::BIGINT, 0), (1::BIGINT, 0))
-                UNION ALL
+                UNION
                 SELECT e.dst, w.dist + 1
                 FROM walk w JOIN edges e ON e.src = w.node
                 WHERE w.dist < 12

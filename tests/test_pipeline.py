@@ -326,3 +326,42 @@ def test_related_entities_seed_resolution_and_determinism(spark, outdir):
         spark, p, seeds=["PRODUCT:does-not-exist-xyz"], n_top=15
     ).collect()
     assert none == []
+
+
+def test_program_releases_its_caches(spark, outdir):
+    """Every relation run_kg and entity_salience persist is released by the
+    program itself: the session's CacheManager is empty after each, with
+    no clearCache() anywhere."""
+    from kgforge.pipeline import entity_salience
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    run_kg(spark, synth_source_files(spark, 60), outdir, n_parts=4)
+    assert cache.isEmpty()
+    entity_salience(spark, _paths(outdir), n_top=5).collect()
+    assert cache.isEmpty()
+
+
+def test_corrupt_lineage_raises_instead_of_rebuilding(spark, outdir):
+    """Only a missing lineage table means "nothing committed". A corrupt
+    one must raise: run_kg must not silently re-extract every partition,
+    and entity_salience must not silently rebuild the canon map."""
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    from kgforge.pipeline import entity_salience
+
+    src = synth_source_files(spark, 60)
+    run_kg(spark, src, outdir, n_parts=4)
+    paths = _paths(outdir)
+    mention_files = sorted(os.walk(paths.mentions))
+    for f in os.listdir(paths.lineage):
+        if f.endswith(".parquet"):
+            with open(os.path.join(paths.lineage, f), "wb") as fh:
+                fh.write(b"not a parquet file" * 8)
+
+    with pytest.raises(Py4JJavaError):
+        run_kg(spark, src, outdir, n_parts=4)
+    assert sorted(os.walk(paths.mentions)) == mention_files  # nothing rewritten
+    with pytest.raises(Py4JJavaError):
+        entity_salience(spark, paths, n_top=5).collect()

@@ -1,23 +1,8 @@
-"""Driver-snapshot rotation invariants (VERDICT r3 #1).
-
-The correctness driver snapshots only the first ~50 registry entries per
-round; rotation must guarantee every query regains a driver row at least
-every other round. These tests pin the contract: pinned north-rule checks
-first, then strictly ascending staleness (never-verified before oldest-
-verified before newest-verified), reproducible from the committed
-CORRECTNESS_r*.json artifacts alone.
-"""
+"""Registry size: the documented query split lives here, once."""
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-
-from kgforge.queries import _PINNED, REGISTRY, _last_driver_round, _row_verified
-
-SNAPSHOT_CAP = 50
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from kgforge.queries import REGISTRY
 
 
 def test_registry_counts_match_docs():
@@ -26,101 +11,3 @@ def test_registry_counts_match_docs():
     this test and all three docs together when adding queries."""
     oracle = sum(1 for qd in REGISTRY.values() if qd.sql is not None)
     assert (len(REGISTRY), oracle) == (96, 85), (len(REGISTRY), oracle)
-
-
-def test_demoted_queries_stay_callable():
-    """r6 demoted q41/q55/q46 to bench-only (DEMOTED): they must stay out
-    of the driver registry (no rotation slot) but remain addressable for
-    bench.py's A/B legs; their operator families keep driver gates via
-    q24 (SimHash oracle twin) and q50 (sharded packing)."""
-    from kgforge.queries.core import DEMOTED
-
-    assert set(DEMOTED) == {
-        "q41_simhash64_fast",
-        "q55_simhash16_fast",
-        "q46_sequence_packing",
-    }
-    assert not set(DEMOTED) & set(REGISTRY)
-    for qd in DEMOTED.values():
-        assert callable(qd.fn)
-
-
-def test_pinned_queries_lead_the_registry():
-    names = list(REGISTRY)
-    assert names[: len(_PINNED)] == _PINNED
-
-
-def test_rotation_is_ascending_staleness():
-    seen = _last_driver_round()
-    tail = [seen.get(k, -1) for k in list(REGISTRY)[len(_PINNED):]]
-    assert tail == sorted(tail)
-
-
-def test_latest_round_absentees_fit_in_snapshot():
-    """Every query with no row in the LATEST driver round must sit inside
-    the next round's snapshot prefix (that's the whole point of rotating)."""
-    rounds = sorted(
-        int(os.path.basename(p)[len("CORRECTNESS_r"):-len(".json")])
-        for p in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))
-    )
-    if not rounds:
-        return  # fresh clone without driver artifacts: nothing to assert
-    latest = json.load(
-        open(os.path.join(ROOT, f"CORRECTNESS_r{rounds[-1]:02d}.json"))
-    )
-    prefix = set(list(REGISTRY)[:SNAPSHOT_CAP])
-    # "absent" = no PASSING row (a failed row must count as unverified so
-    # its fix gets re-checked next round — code-review r4)
-    absent = [k for k in REGISTRY if not _row_verified(latest.get(k))]
-    # rotation can only fit cap-many; absentees beyond the cap would mean
-    # the registry outgrew two-round coverage — fail loudly, don't drift
-    assert len(absent) + len(_PINNED) <= SNAPSHOT_CAP
-    assert not [k for k in absent if k not in prefix]
-
-
-def test_no_query_staler_than_rotation_bound():
-    """Registry-freshness meta-test (VERDICT r4 #4): the rotation exists so
-    no query's latest PASSING driver row goes stale by more than
-    ceil(n_registered / cap) - 1 rounds (= 1 round at 83 queries / cap 50).
-    The r4 rotation worked (all 24 r3 absentees got fresh r4 rows) but
-    nothing asserted it KEEPS working; this fails the build if a future
-    round's snapshot would leave any query beyond the bound.
-
-    Never-verified queries (just added this round) are exempt from the
-    staleness bound — test_latest_round_absentees_fit_in_snapshot already
-    pins that they sit inside the next snapshot prefix."""
-    rounds = sorted(
-        int(os.path.basename(p)[len("CORRECTNESS_r"):-len(".json")])
-        for p in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))
-    )
-    if not rounds:
-        return  # fresh clone without driver artifacts
-    latest = rounds[-1]
-    import math
-
-    bound = math.ceil(len(REGISTRY) / SNAPSHOT_CAP) - 1
-    seen = _last_driver_round()
-    stale = {
-        k: latest - seen[k]
-        for k in REGISTRY
-        if k in seen and latest - seen[k] > bound
-    }
-    assert not stale, (
-        f"queries staler than {bound} round(s) vs r{latest}: {stale}"
-    )
-
-
-def test_row_verified_classification():
-    """Pass = oracle green or rows-only; any failure shape = unverified."""
-    green = {"rows_match": True, "schema_match": True, "hash_match": True,
-             "spark_rows": 5, "oracle_rows": 5, "err": None}
-    rows_only = {"rows_match": None, "schema_match": None, "hash_match": None,
-                 "spark_rows": 2, "oracle_rows": None, "err": "no_oracle"}
-    hash_fail = dict(green, hash_match=False)
-    rows_fail = dict(green, rows_match=False)
-    spark_err = dict(rows_only, err="SPARK ERROR")
-    assert _row_verified(green) and _row_verified(rows_only)
-    assert not _row_verified(hash_fail)
-    assert not _row_verified(rows_fail)
-    assert not _row_verified(spark_err)
-    assert not _row_verified(None)  # query absent from the snapshot

@@ -1,8 +1,9 @@
-"""Local replica of the driver's correctness gate.
+"""Oracle gate at any scale.
 
-Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB over the same parquet tables, then compares row count, column names,
-and an order-insensitive value multiset (stringified, sorted columns).
+Runs every registry entry on Spark and, where it has oracle SQL, its
+DuckDB twin over the same parquet tables, through the same comparison the
+tier-1 suite uses (``kgforge.queries.oracle_gate``): row count, column
+names, and an order-insensitive value multiset.
 
 Usage: python tools/check_oracles.py [--sf 0.001|0.01|0.1] [--only q01,...]
 """
@@ -14,29 +15,7 @@ import sys
 import time
 import traceback
 
-import duckdb
-import pandas as pd
-
 sys.path.insert(0, ".")
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def normalize(df: pd.DataFrame) -> list[tuple]:
-    df = df[sorted(df.columns)]
-
-    def cell(v) -> str:
-        if v is None or (isinstance(v, float) and pd.isna(v)):
-            return "NULL"
-        if isinstance(v, float):
-            return repr(v)
-        return str(v)
-
-    rows = sorted(tuple(cell(v) for v in row) for row in df.itertuples(index=False))
-    return rows
 
 
 def main() -> int:
@@ -46,64 +25,35 @@ def main() -> int:
     args = ap.parse_args()
     sf_dir = f"/root/testdata/sf{args.sf}"
 
-    import __spark_entry__ as entrymod
+    from kgforge.queries import REGISTRY, oracle_gate
     from kgforge.session import get_spark
 
     spark = get_spark(master="local[8]", app_name="check-oracles")
     spark.sparkContext.setLogLevel("ERROR")
-
-    con = duckdb.connect()
-    for tbl in TABLES:
-        con.execute(
-            f"CREATE VIEW {tbl} AS SELECT * FROM '{sf_dir}/{tbl}.parquet'"
-        )
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+    con = oracle_gate.duckdb_views(sf_dir)
     only = set(args.only.split(",")) if args.only else None
 
     n_pass = n_fail = n_rowsonly = 0
-    for name, fn in sorted(qs.items()):
+    for name, entry in sorted(REGISTRY.items()):
         if only and name not in only:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            n_rows, problems = oracle_gate.check(spark, con, sf_dir, entry)
         except Exception:
-            print(f"FAIL {name}: SPARK ERROR")
+            print(f"FAIL {name}: ERROR")
             traceback.print_exc(limit=3)
             n_fail += 1
             continue
         dt = time.time() - t0
-        if name not in oracles:
-            ok = len(sdf) >= 0
-            print(f"rows-only {name}: {len(sdf)} rows [{dt:.1f}s]")
+        if entry.sql is None:
+            print(f"rows-only {name}: {n_rows} rows [{dt:.1f}s]")
             n_rowsonly += 1
-            continue
-        try:
-            odf = con.execute(oracles[name]).df()
-        except Exception:
-            print(f"FAIL {name}: DUCKDB ERROR")
-            traceback.print_exc(limit=3)
-            n_fail += 1
-            continue
-        problems = []
-        if len(sdf) != len(odf):
-            problems.append(f"rowcount {len(sdf)} vs {len(odf)}")
-        if sorted(sdf.columns) != sorted(odf.columns):
-            problems.append(f"cols {sorted(sdf.columns)} vs {sorted(odf.columns)}")
-        if not problems:
-            a, b = normalize(sdf), normalize(odf)
-            if a != b:
-                diff = [
-                    (x, y) for x, y in zip(a, b) if x != y
-                ][:3]
-                problems.append(f"values differ, e.g. {diff}")
-        if problems:
+        elif problems:
             print(f"FAIL {name}: {'; '.join(problems)} [{dt:.1f}s]")
             n_fail += 1
         else:
-            print(f"PASS {name}: {len(sdf)} rows [{dt:.1f}s]")
+            print(f"PASS {name}: {n_rows} rows [{dt:.1f}s]")
             n_pass += 1
 
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only")
