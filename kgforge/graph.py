@@ -42,13 +42,13 @@ def symmetrize(pairs: DataFrame) -> DataFrame:
 
 
 def _partitioned_edges(pairs: DataFrame) -> DataFrame:
-    """Symmetrized edges hash-partitioned on src (the pregel join key) and
-    persisted: every per-round/per-iteration equi-join and the degree
-    aggregation then reuse this partitioning instead of re-shuffling the
-    edge list each round (guide §2.4 "two operations keyed the same way
-    share one exchange"). Partition count follows the session's
-    spark.sql.shuffle.partitions, so the layout stays scale-adaptive
-    (conf-driven), not tuned to local mode.
+    """Symmetrized edges hash-partitioned on src (the pregel join key), for
+    the caller to persist: every per-round/per-iteration equi-join and the
+    degree aggregation then reuse this partitioning instead of
+    re-shuffling the edge list each round (guide §2.4 "two operations
+    keyed the same way share one exchange"). Partition count follows the
+    session's spark.sql.shuffle.partitions, so the layout stays
+    scale-adaptive (conf-driven), not tuned to local mode.
 
     r7b: the cache is also SORTED on src — a cached relation preserves
     its outputOrdering, so the per-iteration SortMergeJoin's edge-side
@@ -57,7 +57,7 @@ def _partitioned_edges(pairs: DataFrame) -> DataFrame:
     iters sorts at join time (q88 warm A/B 6.6s -> 4.3s at sf1)."""
     edges = symmetrize(pairs)
     n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return edges.repartition(n, "src").sortWithinPartitions("src").persist()
+    return edges.repartition(n, "src").sortWithinPartitions("src")
 
 
 def pagerank_scaled(
@@ -70,47 +70,13 @@ def pagerank_scaled(
     ``pairs``: DataFrame[p1, p2] of distinct undirected edges (isolated
     nodes — absent from every edge — are out of scope, as in any
     edge-list formulation). Returns DataFrame[node, d, r] with r the rank
-    scaled by PR_SCALE.
-
-    Recurrence per node v:
-        r'(v) = (den-num)*T // (den*N)  +  num * sum_{u->v}(r(u) div d(u)) div den
-
-    All BIGINT floor arithmetic — no float accumulation, so the result is
-    independent of partitioning and engine. Scale shape (q88 docstring has
-    the full argument): edges/degrees built once and persisted for the
-    loop, released once the result is checkpointed; each iteration is one
-    co-partitioned equi-join + one partial-agg shuffle on dst — the
-    pregel-on-DataFrames shape. The driver loop builds plans,
-    never touches rows.
+    scaled by PR_SCALE; no rows for an empty pair list. It is
+    personalized_pagerank_scaled with every node a source.
     """
-    num, den = damping
-    edges = _partitioned_edges(pairs)
-    deg = (
-        edges.groupBy("src")
-        .agg(F.count("*").alias("d"))
-        .withColumnRenamed("src", "node")
-        .persist()
-    )
-    n_nodes = deg.count()  # bounded driver-side scalar
-    base = ((den - num) * PR_SCALE) // (den * n_nodes)
-    r = deg.select("node", "d", F.lit(PR_SCALE // n_nodes).alias("r"))
-    for _ in range(iters):
-        contrib = edges.join(r, edges["src"] == r["node"]).select(
-            F.col("dst").alias("cnode"), F.expr("r div d").alias("c")
-        )
-        s = contrib.groupBy("cnode").agg(F.sum("c").alias("s"))
-        r = deg.join(s, deg["node"] == s["cnode"], "left").select(
-            "node",
-            "d",
-            (
-                F.lit(base) + F.expr(f"({num} * coalesce(s, 0)) div {den}")
-            ).alias("r"),
-        )
-    # materialize, then free the caches
-    out = r.localCheckpoint(eager=True)
-    deg.unpersist()
-    edges.unpersist()
-    return out
+    # the same plan personalized_pagerank_scaled caches as its edge list,
+    # so the node set is read from that cache instead of re-running pairs
+    nodes = _partitioned_edges(pairs).select(F.col("src").alias("node"))
+    return personalized_pagerank_scaled(pairs, nodes, iters, damping)
 
 
 def personalized_pagerank_scaled(
@@ -125,20 +91,22 @@ def personalized_pagerank_scaled(
 
     ``sources``: DataFrame[node]; seeds absent from the edge list are
     ignored (an isolated seed has no outgoing mass). Returns
-    DataFrame[node, d, r], r scaled by PR_SCALE.
+    DataFrame[node, d, r], r scaled by PR_SCALE; no rows when no source
+    is in the edge list.
 
-    Recurrence (all BIGINT floor arithmetic, bit-exact like
-    pagerank_scaled):
+    Recurrence (all BIGINT floor arithmetic — no float accumulation, so
+    the result is independent of partitioning and engine):
         r0(v)  = T // |S|           if v in S else 0
         r'(v)  = [v in S] * (den-num)*T // (den*|S|)
                  + num * sum_{u->v}(r(u) div d(u)) div den
 
-    Scale shape identical to pagerank_scaled — the seed membership flag
-    rides the rank relation as a 0/1 column, so each iteration is still
-    one co-partitioned equi-join + one partial-agg shuffle.
+    Scale shape (q88 docstring has the full argument): edges and the
+    seed-marked degrees are persisted for the loop and released once the
+    result is checkpointed; each iteration is one co-partitioned equi-join
+    + one partial-agg shuffle on dst. The driver never touches rows.
     """
     num, den = damping
-    edges = _partitioned_edges(pairs)
+    edges = _partitioned_edges(pairs).persist()
     deg = (
         edges.groupBy("src")
         .agg(F.count("*").alias("d"))
@@ -180,7 +148,7 @@ def personalized_pagerank_scaled(
                 + F.expr(f"({num} * coalesce(s, 0)) div {den}")
             ).cast("long").alias("r"),
         )
-    # same hygiene as pagerank_scaled: materialize, then free the caches
+    # materialize, then free the caches
     out = r.select("node", "d", "r").localCheckpoint(eager=True)
     marked.unpersist()
     edges.unpersist()
@@ -207,7 +175,7 @@ def bfs_hops(
     max_hops stays single-digit and each round's shuffles carry only the
     frontier, not the graph.
     """
-    edges = _partitioned_edges(pairs)
+    edges = _partitioned_edges(pairs).persist()
     dist = sources.select("node").distinct().withColumn(
         "dist", F.lit(0)
     ).localCheckpoint(eager=True)
@@ -235,7 +203,7 @@ def bfs_hops(
         frontier = new.select("node")
     # dist is a union of eagerly checkpointed frontiers — it no longer
     # references the edge cache, so release it before returning (r7 cache
-    # hygiene; see pagerank_scaled)
+    # hygiene; see personalized_pagerank_scaled)
     edges.unpersist()
     return dist
 
@@ -260,7 +228,7 @@ def harmonic_centrality(
     frontier keys — frontier shuffles carry |S| x frontier rows; with a
     bounded candidate set this is the same per-round cost as one BFS.
     """
-    edges = _partitioned_edges(pairs)
+    edges = _partitioned_edges(pairs).persist()
     dist = (
         sources.select(F.col("node").alias("s"))
         .distinct()

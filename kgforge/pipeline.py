@@ -5,8 +5,9 @@ Two phases, mirroring where resume matters at 10^12-file scale:
 Phase 1 — **extraction** (embarrassingly parallel, no shuffle, resumable
 per partition): source_files -> clean -> batched mention extraction ->
 mention table partitioned by pmod(xxhash64(repo, path), N) with lineage
-rows. A killed run resumes via left_anti against committed lineage; every
-step is deterministic so the resumed table is fingerprint-identical.
+rows. A killed run resumes by skipping the part_ids committed lineage
+records; every step is deterministic so the resumed table is
+fingerprint-identical.
 
 Phase 2 — **graph** (global): mention linking (MinHash-LSH blocks +
 token-sort scoring) -> iterative connected components -> canonical
@@ -18,6 +19,7 @@ Entry point for spark-submit: ``python -m kgforge.jobs.run_kg``.
 
 from __future__ import annotations
 
+import hashlib
 import time
 from dataclasses import dataclass
 
@@ -83,7 +85,7 @@ def run_extraction(
     resume: bool = True,
 ) -> None:
     """Phase 1: source_files -> partitioned mention table + lineage."""
-    t0 = time.time()
+    t0 = time.perf_counter()
     files = materialize.with_part_id(
         with_clean(source_files), ["repo", "path"], n_parts
     )
@@ -110,79 +112,40 @@ def run_extraction(
     written = spark.read.parquet(paths.mentions).filter(
         F.col("part_id").isin(part_ids)
     )
-    # r7 (guide §2.6 "overlap independent jobs"): the id-collision audit
-    # and the per-partition lineage aggregation are independent scans of
-    # the same committed parquet — run them as two concurrent jobs so the
-    # tail of one back-fills the other's idle cores (wall = max, not sum;
-    # each was ~2.5s at the 400k-file bench). Ordering contract preserved:
-    # lineage rows are only MATERIALIZED here; the append below still
-    # happens after the audit result is in, so a collision abort can never
-    # leave committed lineage behind.
-    from concurrent.futures import ThreadPoolExecutor
-
+    audit_mention_ids(written)  # raises on collision BEFORE any lineage append
     rows = lineage.lineage_rows(
         written, STAGE_MENTIONS, MENTION_CONTENT_COLS
-    ).persist()
-    try:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_audit = pool.submit(audit_mention_ids, written)
-            f_rows = pool.submit(rows.count)
-            f_rows.result()
-            f_audit.result()  # raises on collision BEFORE any lineage append
-        # zero-mention partitions: emit count-0 rows via anti-join
-        universe = spark.createDataFrame(
-            [(int(p),) for p in part_ids], "part_id int"
-        )
-        empty = (
-            universe.join(rows.select("part_id"), "part_id", "left_anti")
-            .select(
-                F.lit(STAGE_MENTIONS).alias("stage"),
-                F.col("part_id").cast("int"),
-                F.lit(0).cast("long").alias("n_rows"),
-                F.lit("0" * 16).alias("fingerprint"),
-                F.lit(int(t0 * 1000)).alias("wall_ms"),
-            )
-        )
-        lineage.append_lineage(rows.unionByName(empty), paths.lineage)
-    finally:
-        rows.unpersist()  # the collision-abort path releases it too
+    ).collect()
+    # zero-mention partitions get a count-0 row
+    empty = set(part_ids) - {r.part_id for r in rows}
+    rows += [(STAGE_MENTIONS, p, 0, "0" * 16) for p in sorted(empty)]
+    lineage.append_rows(spark, rows, t0, paths.lineage)
 
 
 STAGE_GRAPH_INPUT = "graph_input"
 
 
-def _mentions_fingerprint(spark: SparkSession, paths: KGPaths) -> str:
-    """Identity of the graph phase's input: sha256 over the sorted
-    (part_id, fingerprint) pairs of committed mention partitions
-    (<= n_parts rows — a driver-side collect is the cheap path)."""
-    import hashlib
-
-    rows = (
-        spark.read.parquet(paths.lineage)
-        .filter(F.col("stage") == STAGE_MENTIONS)
-        .select("part_id", "fingerprint")
+def _graph_input_state(spark: SparkSession, paths: KGPaths) -> tuple[str, bool]:
+    """``(input_fp, built)`` from one collect of lineage. ``input_fp`` is
+    sha256 over the sorted (part_id, fingerprint) pairs of committed mention
+    partitions; ``built`` is true iff lineage records a graph build from
+    exactly that state. A missing lineage table means no build; any other
+    read failure propagates."""
+    lin = materialize.read_parquet_if_exists(spark, paths.lineage)
+    rows = [] if lin is None else (
+        lin.filter(F.col("stage").isin(STAGE_MENTIONS, STAGE_GRAPH_INPUT))
+        .select("stage", "part_id", "fingerprint")
         .collect()
     )
-    blob = ";".join(f"{r.part_id}:{r.fingerprint}" for r in sorted(rows))
-    return hashlib.sha256(blob.encode()).hexdigest()[:16]
-
-
-def _graph_input_committed(
-    spark: SparkSession, paths: KGPaths, input_fp: str | None = None
-) -> bool:
-    """True iff lineage records a graph build from EXACTLY the mention-table
-    state ``input_fp`` (default: the current one). A missing lineage table
-    means no build; any other read failure propagates."""
-    lin = materialize.read_parquet_if_exists(spark, paths.lineage)
-    if lin is None:
-        return False
-    fp = input_fp or _mentions_fingerprint(spark, paths)
-    return (
-        lin.filter(
-            (F.col("stage") == STAGE_GRAPH_INPUT) & (F.col("fingerprint") == fp)
-        ).count()
-        > 0
+    mention_fps = sorted(
+        (r.part_id, r.fingerprint) for r in rows if r.stage == STAGE_MENTIONS
     )
+    blob = ";".join(f"{p}:{fp}" for p, fp in mention_fps)
+    input_fp = hashlib.sha256(blob.encode()).hexdigest()[:16]
+    built = any(
+        r.stage == STAGE_GRAPH_INPUT and r.fingerprint == input_fp for r in rows
+    )
+    return input_fp, built
 
 
 def _canon_map_path(paths: KGPaths) -> str:
@@ -268,7 +231,7 @@ def _fresh_canon_map(spark, paths: KGPaths, link_threshold: float):
 
     A rebuilt map is checkpointed so its consumers read it the way they
     read the committed artifact, and its surface cache is released."""
-    if _graph_input_committed(spark, paths):
+    if _graph_input_state(spark, paths)[1]:
         committed = materialize.read_parquet_if_exists(
             spark, _canon_map_path(paths)
         )
@@ -397,10 +360,11 @@ def run_graph(
     re-attach to their canonical surface by an equi-join on the surface key
     at the end (AQE skew-join handles hot surface keys).
     """
-    input_fp = _mentions_fingerprint(spark, paths)
+    t0 = time.perf_counter()
+    input_fp, built = _graph_input_state(spark, paths)
     # short-circuit: if the graph was already built from EXACTLY this
     # mention-table state, the committed triple table is current.
-    if resume and _graph_input_committed(spark, paths, input_fp):
+    if resume and built:
         return spark.read.parquet(paths.triples)
 
     mentions = spark.read.parquet(paths.mentions)
@@ -433,12 +397,11 @@ def run_graph(
     else:
         materialize.write_partitioned(triples, paths.triples)
     written = spark.read.parquet(paths.triples)
-    rows = lineage.lineage_rows(written, STAGE_TRIPLES, TRIPLE_CONTENT_COLS)
-    marker = rows.sparkSession.createDataFrame(
-        [(STAGE_GRAPH_INPUT, -1, 0, input_fp, 0)],
-        "stage string, part_id int, n_rows long, fingerprint string, wall_ms long",
-    )
-    lineage.append_lineage(rows.unionByName(marker), paths.lineage)
+    rows = lineage.lineage_rows(
+        written, STAGE_TRIPLES, TRIPLE_CONTENT_COLS
+    ).collect()
+    rows.append((STAGE_GRAPH_INPUT, -1, 0, input_fp))
+    lineage.append_rows(spark, rows, t0, paths.lineage)
     return written
 
 

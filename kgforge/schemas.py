@@ -115,7 +115,8 @@ TRIPLES = StructType(
 # fingerprint = hex(bit_xor(xxhash64(row))) — order-insensitive, O(1) memory
 # per partition (a sorted-list sha256 would need a per-partition collect; XOR
 # folding scales to arbitrarily large partitions and is what the resume
-# byte-identity test compares).
+# byte-identity test compares). wall_ms: the committing phase's measured
+# duration, the same on every row of one append.
 LINEAGE = StructType(
     [
         StructField("stage", StringType(), False),

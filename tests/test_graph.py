@@ -246,6 +246,12 @@ def test_pagerank_rank_mass_conserved(spark):
     assert PR_SCALE - 1_000_000 <= total <= PR_SCALE
 
 
+def test_pagerank_empty_pair_list_has_no_rows(spark):
+    """A KG with no co-mentions has an empty pair list: PageRank returns
+    no rows instead of dividing by a zero node count."""
+    assert pagerank_scaled(_pairs_df(spark, [])).collect() == []
+
+
 def _ppr_python(pairs, sources, iters=4, num=17, den=20):
     """Bit-exact Python mirror of personalized_pagerank_scaled's integer
     recurrence (same floor arithmetic, same order-free sums)."""

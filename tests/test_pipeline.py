@@ -70,11 +70,11 @@ def test_resume_is_byte_identical(spark, outdir, tmp_path):
     ).select("repo", "path", "commit", "lang", "content")
     run_extraction(spark, partial, paths, n_parts=PARTS, resume=True)
     done = lin.completed_parts(spark, paths.lineage, STAGE_MENTIONS)
-    assert done.count() == 3
+    assert len(done) == 3
 
-    # resume with the FULL input: anti-join must skip the 3 done partitions
+    # resume with the FULL input: must skip the 3 done partitions
     run_extraction(spark, src, paths, n_parts=PARTS, resume=True)
-    assert lin.completed_parts(spark, paths.lineage, STAGE_MENTIONS).count() == PARTS
+    assert len(lin.completed_parts(spark, paths.lineage, STAGE_MENTIONS)) == PARTS
     resumed = run_graph(spark, paths, n_parts=PARTS)
 
     # clean reference run
@@ -120,7 +120,7 @@ def test_graph_phase_short_circuits_when_input_unchanged(spark, outdir):
     run_kg(spark, src, outdir, n_parts=4)
     ldf = spark.read.parquet(f"{outdir}/lineage")
     n_before = ldf.filter(F.col("stage") == "triples").count()
-    # identical rerun: extraction anti-joins to nothing, graph phase must
+    # identical rerun: extraction skips every partition, graph phase must
     # short-circuit on the graph_input fingerprint marker
     triples = run_kg(spark, src, outdir, n_parts=4)
     ldf2 = spark.read.parquet(f"{outdir}/lineage")
@@ -365,3 +365,40 @@ def test_corrupt_lineage_raises_instead_of_rebuilding(spark, outdir):
     assert sorted(os.walk(paths.mentions)) == mention_files  # nothing rewritten
     with pytest.raises(Py4JJavaError):
         entity_salience(spark, paths, n_top=5).collect()
+
+
+# Job counts of the build and the resume re-run below in the test session
+# (local[4], 8 shuffle partitions), as upper bounds: a change that adds
+# jobs to run_kg must raise them on purpose. The build measured 51-53 over
+# repeated runs (adaptive execution submits some query stages as jobs
+# depending on timing), the resume always 6.
+TINY_BUILD_JOBS = 53
+TINY_RESUME_JOBS = 6
+
+
+def test_run_kg_jobs_are_grouped_and_bounded(spark, tmp_path):
+    """Every job of a tiny run_kg and of its identical re-run runs in the
+    caller's job group: none comes from a thread without it, which
+    cancelJobGroup and job-group attribution would miss. Each call runs
+    no more jobs than the pinned counts."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()  # job events reach the tracker async
+    src = synth_source_files(spark, 60)
+    run_kg(spark, src, str(tmp_path / "warm"), n_parts=4)  # JVM warm-up
+
+    def jobs(group: str) -> int:
+        bus.waitUntilEmpty()
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup(group, group)
+        try:
+            run_kg(spark, src, str(tmp_path / "kg"), n_parts=4)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        bus.waitUntilEmpty()
+        assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+        return len(tracker.getJobIdsForGroup(group))
+
+    assert jobs("test-run-kg-build") <= TINY_BUILD_JOBS
+    assert jobs("test-run-kg-resume") <= TINY_RESUME_JOBS
