@@ -2,9 +2,10 @@
 
 Absent from the reference (SURVEY.md §2.6); required by the north rule.
 Min-label propagation with **pointer jumping** expressed entirely as
-DataFrame joins + aggregations:
+DataFrame joins + aggregations, over the edge endpoints only:
 
-- state: assignment (id -> comp), comp initialized to id;
+- state: assignment (id -> comp) of every vertex that touches an edge,
+  initialized from the edge list to min(self, neighbours) (one relax);
 - each round: (a) relax — push min(comp) across edges in both directions
   and re-minimize per id (one hop), then (b) jump — comp := comp(comp),
   following the label one more hop (the Shiloach-Vishkin / pointer-doubling
@@ -14,6 +15,9 @@ DataFrame joins + aggregations:
   ~30 rounds (MAX_ITERS=50 is an assert-with-slack, not a budget).
 - converged when no assignment changed (exact decimal id-sum witness —
   min-propagation only ever decreases ids).
+
+Isolated vertices skip the rounds (min-propagation cannot change them) and
+are labelled with their own id by one left join at the end.
 
 Lineage each round is truncated by checkpointing: ``localCheckpoint`` by
 default (fast, executor-local — fine on local[k]), or **reliable**
@@ -29,8 +33,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from kgforge.graph import symmetrize
 
 MAX_ITERS = 50
 
@@ -58,10 +64,13 @@ def connected_components(
 ) -> DataFrame:
     """vertices(mention_id) + edges(src, dst) -> (mention_id, component_id).
 
-    Each iteration: two hash joins (edge ⨝ assignment, assignment ⨝
-    assignment) + one hash agg — all shuffle-partitioned on the id key, so
-    consecutive rounds reuse the same partitioning. AQE handles skewed hub
-    components.
+    Only edge endpoints iterate; every edge endpoint must be a vertex.
+    Each endpoint starts at min(self, neighbours), read straight off the
+    symmetric edge list. Each iteration: two hash joins (edge ⨝
+    assignment, assignment ⨝ assignment) + one hash agg — all
+    shuffle-partitioned on the id key, so consecutive rounds reuse the
+    same partitioning. AQE handles skewed hub components. Duplicate edges
+    and self-loops change no minimum.
     """
     if reliable is None:
         reliable = bool(os.environ.get("KGFORGE_RELIABLE_CKPT"))
@@ -69,32 +78,13 @@ def connected_components(
         _ensure_ckpt_dir(vertices)
 
     sym = _truncate(
-        edges.select("src", "dst")
-        .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .dropDuplicates(["src", "dst"]),
+        symmetrize(edges.select(F.col("src").alias("p1"), F.col("dst").alias("p2"))),
         reliable,
     )
-
-    # r7 (guide §1.2 step 1): iterate ONLY over vertices that touch an
-    # edge. An isolated vertex's component is itself by definition and
-    # min-propagation can never change it, yet it used to ride every
-    # round's relax-union, jump-join, and convergence agg — and in the
-    # KG's surface graph isolated vertices are the overwhelming majority
-    # (400k-file bench: 277k distinct surfaces, 22k linked edges, so
-    # ~14x fewer rows per round after the split). Isolated vertices are
-    # unioned back with component_id = mention_id at the end; sym lists
-    # both directions, so its distinct src column is exactly the touched
-    # vertex set. Result unchanged for every vertex.
-    touched = sym.select(F.col("src").alias("mention_id")).distinct()
-    isolated = vertices.join(touched, ["mention_id"], "left_anti").select(
-        F.col("mention_id"), F.col("mention_id").alias("component_id")
-    )
-    active = vertices.join(touched, ["mention_id"], "left_semi")
-
     assign = _truncate(
-        active.select(
-            F.col("mention_id"), F.col("mention_id").alias("component_id")
-        ),
+        sym.groupBy("src")
+        .agg(F.least(F.col("src"), F.min("dst")).alias("component_id"))
+        .withColumnRenamed("src", "mention_id"),
         reliable,
     )
 
@@ -146,7 +136,12 @@ def connected_components(
         new_sum = _sum_ids(new_assign)
         assign = new_assign
         if new_sum == prev_sum:
-            return assign.unionByName(isolated)
+            return vertices.join(assign, "mention_id", "left").select(
+                "mention_id",
+                F.coalesce(F.col("component_id"), F.col("mention_id")).alias(
+                    "component_id"
+                ),
+            )
         prev_sum = new_sum
     raise RuntimeError(f"connected_components did not converge in {max_iters} iters")
 
@@ -154,10 +149,9 @@ def connected_components(
 def canonical_surfaces(assign: DataFrame, mentions_keyed: DataFrame) -> DataFrame:
     """Pick each component's canonical surface = the min-mention-id member's
     norm_surface (deterministic), and attach it to every member mention."""
-    members = mentions_keyed.join(assign, "mention_id")
-    canon = (
-        members.groupBy("component_id")
-        .agg(F.min(F.struct("mention_id", "norm_surface")).alias("_m"))
-        .select("component_id", F.col("_m.norm_surface").alias("canon_surface"))
+    first = F.min(F.struct("mention_id", "norm_surface")).over(
+        Window.partitionBy("component_id")
     )
-    return members.join(canon, "component_id")
+    return mentions_keyed.join(assign, "mention_id").withColumn(
+        "canon_surface", first["norm_surface"]
+    )

@@ -166,12 +166,12 @@ def build_canon_map(
     Returns ``(canon_map, surfaces)``. ``canon_map`` is lazy and reads the
     persisted ``surfaces``; the caller unpersists ``surfaces`` once the
     map's last consumer has run."""
-    # r7: persist the distinct-surface relation — it is referenced by the
-    # linker (numeric + textual branches), the CC active/isolated split,
-    # and canonical_surfaces (members + canon), so without the cache the
-    # full mention-table aggregation re-ran up to ~5x per graph build
-    # (guide §5 "worth it when a DataFrame is reused"). Small by
-    # construction (distinct (type, surface) forms, not mentions).
+    # Persist the distinct-surface relation: it is referenced by the
+    # linker (numeric + textual branches), the CC vertex-labelling join
+    # and canonical_surfaces' join, so without the cache the full
+    # mention-table aggregation would re-run ~4x per graph build (guide §5
+    # "worth it when a DataFrame is reused"). Small by construction
+    # (distinct (type, surface) forms, not mentions).
     surfaces = (
         mentions.groupBy("entity_type", "norm_surface")
         .agg(F.min("mention_id").alias("mention_id"))

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from kgforge.canon import canonical_surfaces, connected_components
 
@@ -81,7 +82,10 @@ def test_permutation_invariance(spark):
     edges = [(0, 1), (1, 2), (5, 6)]
     comp_a = _run(spark, 8, edges)
     comp_b = _run(spark, 8, [(b, a) for a, b in reversed(edges)])
-    assert comp_a == comp_b
+    # repeated edges, both orientations of one edge and self-loops (on a
+    # linked and on an isolated vertex) change no component
+    comp_c = _run(spark, 8, edges + [(0, 1), (1, 0), (6, 5), (2, 2), (7, 7)])
+    assert comp_a == comp_b == comp_c
 
 
 def test_min_id_convention(spark):
@@ -92,6 +96,23 @@ def test_min_id_convention(spark):
 def test_empty_edges(spark):
     comp = _run(spark, 3, [])
     assert comp == {0: 0, 1: 1, 2: 2}
+
+
+def test_edge_input_is_computed_once(spark):
+    """The edge plan (in a real build: the whole linker) is scanned once,
+    not once per orientation of the symmetrized edge list."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        acc.add(1)
+        return x
+
+    pairs = [(0, 1), (1, 2), (3, 4), (4, 5), (6, 7)]
+    raw = spark.createDataFrame(pairs, "src long, dst long")
+    edges = raw.select(F.udf(counted, "long")("src").alias("src"), "dst")
+    v = spark.createDataFrame([(i,) for i in range(9)], "mention_id long")
+    connected_components(v, edges).collect()
+    assert acc.value == len(pairs)
 
 
 def test_canonical_surface_min_member(spark):
