@@ -17,7 +17,8 @@ DataFrame joins + aggregations, over the edge endpoints only:
   min-propagation only ever decreases ids).
 
 Isolated vertices skip the rounds (min-propagation cannot change them) and
-are labelled with their own id by one left join at the end.
+are labelled with their own id by one left join at the end; with no edges
+at all, no round runs.
 
 Lineage each round is truncated by checkpointing: ``localCheckpoint`` by
 default (fast, executor-local — fine on local[k]), or **reliable**
@@ -97,7 +98,12 @@ def connected_components(
         ).first()["s"]
 
     prev_sum = _sum_ids(assign)
+    # no edges: the assignment is empty, its sum NULL, and it is already a
+    # fixpoint — every vertex is isolated
+    converged = prev_sum is None
     for _ in range(max_iters):
+        if converged:
+            break
         # (a) relax: neighbor's current component, pushed across each edge
         nbr = (
             sym.join(assign, sym["dst"] == assign["mention_id"], "inner")
@@ -135,15 +141,16 @@ def connected_components(
 
         new_sum = _sum_ids(new_assign)
         assign = new_assign
-        if new_sum == prev_sum:
-            return vertices.join(assign, "mention_id", "left").select(
-                "mention_id",
-                F.coalesce(F.col("component_id"), F.col("mention_id")).alias(
-                    "component_id"
-                ),
-            )
+        converged = new_sum == prev_sum
         prev_sum = new_sum
-    raise RuntimeError(f"connected_components did not converge in {max_iters} iters")
+    if not converged:
+        raise RuntimeError(f"connected_components did not converge in {max_iters} iters")
+    return vertices.join(assign, "mention_id", "left").select(
+        "mention_id",
+        F.coalesce(F.col("component_id"), F.col("mention_id")).alias(
+            "component_id"
+        ),
+    )
 
 
 def canonical_surfaces(assign: DataFrame, mentions_keyed: DataFrame) -> DataFrame:

@@ -5,14 +5,14 @@ Spark-first for 100 TB:
 
 1. **Blocking** — DataFrame-native MinHash over character shingles of the
    normalized surface: ``b`` bands, each band's signature =
-   min(xxhash64(band_id, shingle)). Mentions sharing (band, signature, type)
+   min(xxhash64(band_id, shingle)). Surfaces sharing (band, signature, type)
    land in one block -> candidate pairs come from a block-local self-join
    instead of the O(n^2) cross join.
 2. **Hot-block control** — blocks larger than ``max_block`` are *salted*:
    deterministically split by a hash of mention_id so no single reduce task
    owns a mega-block (FIXTURES.md hot-surface fixture; AQE skew-join also
-   on). Identical surfaces short-circuit through an exact-key block so
-   salting never loses exact duplicates.
+   on). The input is distinct (type, surface) forms, so there are no
+   exact duplicates for salting to separate.
 3. **Scoring** — token-sort-ratio (sorted-token Levenshtein ratio) as a
    vectorized pandas UDF over candidate pairs only.
 
@@ -104,21 +104,20 @@ def minhash_blocks(
 
 
 def candidate_pairs(
-    mentions: DataFrame,
+    surfaces: DataFrame,
     bands: int = DEFAULT_BANDS,
     shingle: int = DEFAULT_SHINGLE,
     max_block: int = DEFAULT_MAX_BLOCK,
-    assume_distinct: bool = False,
 ) -> DataFrame:
-    """Blocked candidate pairs (src < dst), deduplicated across bands.
+    """Blocked candidate pairs (src < dst) over distinct surface forms,
+    deduplicated across bands.
 
     Hot blocks (> max_block members) are salted: members are split into
     ceil(n/max_block) deterministic sub-blocks by xxhash64(mention_id); this
     trades a sliver of recall inside pathological blocks for bounded task
-    size — exact-duplicate surfaces are separately paired via an exact-key
-    block so they are never lost.
+    size.
     """
-    blocks = minhash_blocks(mentions, bands, shingle)
+    blocks = minhash_blocks(surfaces, bands, shingle)
 
     # Block sizes via a window over the block key — NOT a broadcast join:
     # the count table has one row per multi-member block, which is unbounded
@@ -143,40 +142,10 @@ def candidate_pairs(
         "entity_type", "band", "sig", "salt",
         F.col("mention_id").alias("dst"), F.col("norm_surface").alias("surf_b"),
     )
-    pairs = left.join(right, ["entity_type", "band", "sig", "salt"]).filter(
-        F.col("src") < F.col("dst")
-    )
-
-    if assume_distinct:
-        # Input rows are already distinct (type, surface) forms — the
-        # pipeline's surface-level linking — so the exact-duplicate join
-        # would be a full-shuffle no-op; skip it.
-        return pairs.select("src", "dst", "surf_a", "surf_b").dropDuplicates(
-            ["src", "dst"]
-        )
-
-    # Exact-duplicate fast path: same (type, surface) always pairs, immune
-    # to band/salt splits. STAR edges to each group's min mention_id —
-    # O(n) edges per duplicate group, identical connected components
-    # (every member reaches every other through the min member). The old
-    # all-pairs self-join was quadratic in per-surface duplicate count: a
-    # surface repeated 10^9 times would emit ~5*10^17 pairs (VERDICT r2
-    # #4). min <= mention_id always, so src < dst holds by construction.
-    wmin = Window.partitionBy("entity_type", "norm_surface")
-    exact = (
-        mentions.withColumn("_min_id", F.min("mention_id").over(wmin))
-        .filter(F.col("mention_id") != F.col("_min_id"))
-        .select(
-            F.col("_min_id").alias("src"),
-            F.col("mention_id").alias("dst"),
-            F.col("norm_surface").alias("surf_a"),
-            F.col("norm_surface").alias("surf_b"),
-        )
-    )
-
     return (
-        pairs.select("src", "dst", "surf_a", "surf_b")
-        .unionByName(exact)
+        left.join(right, ["entity_type", "band", "sig", "salt"])
+        .filter(F.col("src") < F.col("dst"))
+        .select("src", "dst", "surf_a", "surf_b")
         .dropDuplicates(["src", "dst"])
     )
 
@@ -193,44 +162,17 @@ def score_edges(pairs: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataF
         F.abs(la - lb) <= (1.0 - threshold) * F.greatest(la, lb)
     )
     scored = pruned.withColumn(
-        "sim",
-        F.when(F.col("surf_a") == F.col("surf_b"), F.lit(1.0)).otherwise(
-            token_sort_ratio_udf(F.col("surf_a"), F.col("surf_b"))
-        ),
+        "sim", token_sort_ratio_udf(F.col("surf_a"), F.col("surf_b"))
     )
     return scored.filter(F.col("sim") >= threshold).select("src", "dst", "sim")
-
-
-def link_mentions(
-    mentions_keyed: DataFrame,
-    bands: int = DEFAULT_BANDS,
-    shingle: int = DEFAULT_SHINGLE,
-    threshold: float = DEFAULT_THRESHOLD,
-    max_block: int = DEFAULT_MAX_BLOCK,
-    assume_distinct: bool = False,
-) -> DataFrame:
-    """MENTIONS_KEYED -> EDGES."""
-    pairs = candidate_pairs(
-        mentions_keyed.select("mention_id", "entity_type", "norm_surface"),
-        bands,
-        shingle,
-        max_block,
-        assume_distinct,
-    )
-    return score_edges(pairs, threshold)
 
 
 NUMERIC_TYPES = ("PRICE", "PHONE")
 
 
-def typed_link_surfaces(
-    surfaces: DataFrame,
-    bands: int = DEFAULT_BANDS,
-    shingle: int = DEFAULT_SHINGLE,
-    threshold: float = DEFAULT_THRESHOLD,
-    max_block: int = DEFAULT_MAX_BLOCK,
-) -> DataFrame:
-    """Typed blocking over distinct surface forms (the pipeline's linker).
+def typed_link_surfaces(surfaces: DataFrame) -> DataFrame:
+    """Typed blocking over distinct (mention_id, entity_type, norm_surface)
+    surface forms (the pipeline's linker) -> EDGES.
 
     PRICE/PHONE surfaces carry a canonical numeric value — two price
     surfaces corefer iff their comma-stripped amounts are equal ("2,500 ብር"
@@ -241,7 +183,7 @@ def typed_link_surfaces(
     candidate pairs at 20k files, value-blocking ~none).
 
     Textual types (PRODUCT/LOC/...) go through banded MinHash-LSH + scored
-    token-sort similarity as before.
+    token-sort similarity.
     """
     numeric = surfaces.filter(F.col("entity_type").isin(*NUMERIC_TYPES))
     textual = surfaces.filter(~F.col("entity_type").isin(*NUMERIC_TYPES))
@@ -264,7 +206,5 @@ def typed_link_surfaces(
         )
     )
 
-    text_edges = link_mentions(
-        textual, bands, shingle, threshold, max_block, assume_distinct=True
-    )
+    text_edges = score_edges(candidate_pairs(textual))
     return num_edges.unionByName(text_edges)

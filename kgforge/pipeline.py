@@ -154,18 +154,13 @@ def _canon_map_path(paths: KGPaths) -> str:
     return paths.mentions.rstrip("/").rsplit("/", 1)[0] + "/canon_map"
 
 
-def build_canon_map(
-    mentions: DataFrame, link_threshold: float = link.DEFAULT_THRESHOLD
-) -> tuple[DataFrame, DataFrame]:
+def build_canon_map(mentions: DataFrame, path: str) -> None:
     """Distinct surface forms -> canonical surface, via typed MinHash-LSH
-    linking + connected components. Shared by run_graph (triple
-    canonicalization) and entity_salience (graph vertex identity), so both
-    agree on entity boundaries. Runs over DISTINCT (entity_type,
-    norm_surface) — see run_graph's scale note.
-
-    Returns ``(canon_map, surfaces)``. ``canon_map`` is lazy and reads the
-    persisted ``surfaces``; the caller unpersists ``surfaces`` once the
-    map's last consumer has run."""
+    linking + connected components, written to ``path``. The one place the
+    canonicalization decision is made: run_graph commits it, and the
+    triple table and the read path (entity_salience, related_entities)
+    read that committed map, so all agree on entity boundaries. Runs over
+    DISTINCT (entity_type, norm_surface) — see run_graph's scale note."""
     # Persist the distinct-surface relation: it is referenced by the
     # linker (numeric + textual branches), the CC vertex-labelling join
     # and canonical_surfaces' join, so without the cache the full
@@ -178,12 +173,14 @@ def build_canon_map(
         .select("mention_id", "entity_type", "norm_surface")
         .persist()
     )
-    edges = link.typed_link_surfaces(surfaces, threshold=link_threshold)
-    assign = canon.connected_components(surfaces.select("mention_id"), edges)
-    canon_map = canon.canonical_surfaces(assign, surfaces).select(
-        "entity_type", "norm_surface", "canon_surface"
-    )
-    return canon_map, surfaces
+    try:
+        edges = link.typed_link_surfaces(surfaces)
+        assign = canon.connected_components(surfaces.select("mention_id"), edges)
+        canon.canonical_surfaces(assign, surfaces).select(
+            "entity_type", "norm_surface", "canon_surface"
+        ).write.mode("overwrite").parquet(path)
+    finally:
+        surfaces.unpersist()
 
 
 def entity_salience(
@@ -191,7 +188,6 @@ def entity_salience(
     paths: KGPaths,
     iters: int = 4,
     n_top: int = 100,
-    link_threshold: float = link.DEFAULT_THRESHOLD,
 ) -> DataFrame:
     """Canonical-entity salience: scaled-integer PageRank over the entity
     co-mention graph (kgforge/graph.py::pagerank_scaled).
@@ -210,7 +206,7 @@ def entity_salience(
     """
     from kgforge.graph import pagerank_scaled
 
-    pairs, _ = _entity_comention_pairs(spark, paths, link_threshold)
+    pairs, _ = _entity_comention_pairs(spark, paths)
     r = pagerank_scaled(pairs, iters=iters)
     return (
         r.select(
@@ -223,39 +219,27 @@ def entity_salience(
     )
 
 
-def _fresh_canon_map(spark, paths: KGPaths, link_threshold: float):
-    """Reuse run_graph's committed canon_map when it was built from EXACTLY
-    this mention-table state (same fingerprint discipline as the graph
-    phase's resume short-circuit); otherwise rebuild. Avoids a second
-    LSH + CC pass in the common run_kg --salience/--related flow.
-
-    A rebuilt map is checkpointed so its consumers read it the way they
-    read the committed artifact, and its surface cache is released."""
-    if _graph_input_state(spark, paths)[1]:
-        committed = materialize.read_parquet_if_exists(
-            spark, _canon_map_path(paths)
-        )
-        if committed is not None:
-            return committed
-    canon_map, surfaces = build_canon_map(
-        spark.read.parquet(paths.mentions), link_threshold=link_threshold
-    )
-    canon_map = canon_map.localCheckpoint(eager=True)
-    surfaces.unpersist()
-    return canon_map
-
-
-def _entity_comention_pairs(spark, paths: KGPaths, link_threshold: float):
+def _entity_comention_pairs(spark, paths: KGPaths):
     """(pairs, canon_map): distinct undirected co-mention edges between
     canonical entities — the shared graph both entity_salience (global
     PageRank) and related_entities (personalized PageRank) rank over.
     One distinct + one co-partitioned self-equi-join on the doc key
     (bounded entities per document, so linear like q81's co-purchase
-    build)."""
+    build).
+
+    ``canon_map`` is the one run_graph committed. The read path never
+    links: a map not built from the current mention state (same
+    fingerprint discipline as the graph phase's resume short-circuit)
+    raises, and so does reading a missing one."""
     from kgforge.triples import entity_key
 
+    if not _graph_input_state(spark, paths)[1]:
+        raise RuntimeError(
+            f"no committed canon map for the mention table at {paths.mentions}:"
+            " run the graph phase (run_graph / run_kg) first"
+        )
     mentions = spark.read.parquet(paths.mentions)
-    canon_map = _fresh_canon_map(spark, paths, link_threshold)
+    canon_map = spark.read.parquet(_canon_map_path(paths))
     doc_ent = (
         mentions.join(canon_map, ["entity_type", "norm_surface"])
         .select(
@@ -285,7 +269,6 @@ def related_entities(
     seeds: list[str],
     iters: int = 4,
     n_top: int = 25,
-    link_threshold: float = link.DEFAULT_THRESHOLD,
 ) -> DataFrame:
     """Seed-relative entity ranking: personalized PageRank over the same
     canonical co-mention graph entity_salience uses, with teleport mass
@@ -306,7 +289,7 @@ def related_entities(
     from kgforge.graph import personalized_pagerank_scaled
     from kgforge.triples import entity_key
 
-    pairs, canon_map = _entity_comention_pairs(spark, paths, link_threshold)
+    pairs, canon_map = _entity_comention_pairs(spark, paths)
     raw = spark.createDataFrame([(s,) for s in seeds], "raw string")
     parsed = raw.select(
         F.substring_index("raw", ":", 1).alias("entity_type"),
@@ -346,7 +329,6 @@ def run_graph(
     spark: SparkSession,
     paths: KGPaths,
     n_parts: int = materialize.DEFAULT_PARTS,
-    link_threshold: float = link.DEFAULT_THRESHOLD,
     resume: bool = True,
     upsert: bool = False,
 ) -> DataFrame:
@@ -368,16 +350,14 @@ def run_graph(
         return spark.read.parquet(paths.triples)
 
     mentions = spark.read.parquet(paths.mentions)
-    canon_map, surfaces = build_canon_map(mentions, link_threshold=link_threshold)
-
-    # The canonicalization decision is itself an artifact: persist it so
-    # (a) entity resolution is auditable after the fact and (b) downstream
-    # consumers (entity_salience) reuse it instead of re-running LSH + CC
-    # over the full mention table — at 100 TB the linking pass dwarfs the
-    # map's size (distinct surfaces only). Reading it back also means the
-    # triple join consumes the committed artifact, not a recomputation.
-    canon_map.write.mode("overwrite").parquet(_canon_map_path(paths))
-    surfaces.unpersist()  # the write above was the map's last consumer
+    # The canonicalization decision is itself an artifact: committed so
+    # (a) entity resolution is auditable after the fact and (b) the read
+    # path (entity_salience, related_entities) reads it instead of
+    # re-running LSH + CC over the full mention table — at 100 TB the
+    # linking pass dwarfs the map's size (distinct surfaces only). Reading
+    # it back also means the triple join consumes the committed artifact,
+    # not a recomputation.
+    build_canon_map(mentions, _canon_map_path(paths))
     canon_map = spark.read.parquet(_canon_map_path(paths))
 
     canonical = mentions.join(canon_map, ["entity_type", "norm_surface"])

@@ -98,6 +98,25 @@ def test_empty_edges(spark):
     assert comp == {0: 0, 1: 1, 2: 2}
 
 
+def test_empty_edges_run_no_round(spark, monkeypatch):
+    """No edges: the empty initial assignment is already a fixpoint, so
+    only the two truncations before the first round run."""
+    from kgforge import canon
+
+    calls = []
+    real = canon._truncate
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(canon, "_truncate", counting)
+    assert _run(spark, 3, []) == {0: 0, 1: 1, 2: 2}
+    assert len(calls) == 2
+    assert _run(spark, 3, [(0, 1)]) == {0: 0, 1: 0, 2: 2}
+    assert len(calls) == 5  # two more before, one round
+
+
 def test_edge_input_is_computed_once(spark):
     """The edge plan (in a real build: the whole linker) is scanned once,
     not once per orientation of the symmetrized edge list."""

@@ -2,13 +2,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from kgforge.link import (
     candidate_pairs,
-    link_mentions,
     token_sort_ratio,
-    DEFAULT_THRESHOLD,
+    typed_link_surfaces,
 )
 
 
@@ -32,43 +29,26 @@ def test_near_duplicates_linked(spark):
         ("PRODUCT", "nike air  max"),   # ws variant (normalized upstream, sim=1 here after sort)
         ("PRODUCT", "air max nike"),    # word order
         ("PRODUCT", "completely different thing"),
-        ("PRICE", "nike air max"),      # same surface, different type: never linked
+        ("LOC", "nike air max"),        # same surface, different type: never linked
     ]
-    edges = link_mentions(_mentions(spark, rows)).collect()
+    edges = typed_link_surfaces(_mentions(spark, rows)).collect()
     linked = {(e.src, e.dst) for e in edges}
     assert (0, 2) in linked
     assert all(3 not in (a, b) for a, b in linked)
     assert all(4 not in (a, b) for a, b in linked)
 
 
-def test_exact_duplicates_always_pair(spark):
-    rows = [("LOC", "addis abeba")] * 3 + [("LOC", "gondar")]
-    edges = link_mentions(_mentions(spark, rows)).collect()
-    linked = {(e.src, e.dst) for e in edges}
-    assert {(0, 1), (0, 2), (1, 2)} <= linked
-
-
-def test_hot_block_salting_bounds_pairs_but_keeps_exact(spark):
-    # one hot surface in 40 mentions: salted blocks may split it, but the
-    # exact-key STAR path still connects every duplicate to the group's
-    # min member — identical connected components, O(n) not O(n^2) edges
+def test_hot_block_salting_bounds_pairs(spark):
+    # 40 distinct surfaces that share most shingles land in one hot LSH
+    # block: unsalted it emits every pair, salted into sub-blocks of about
+    # max_block members it emits a subset, never the all-pairs blowup
     # (VERDICT r2 "What's wrong" #4)
-    rows = [("PRODUCT", "hot item")] * 40
-    pairs = candidate_pairs(_mentions(spark, rows), max_block=10)
-    got = {(r.src, r.dst) for r in pairs.collect()}
-    assert {(0, i) for i in range(1, 40)} <= got  # one component via the star
-    assert len(got) < 40 * 39 // 2  # never the all-pairs blowup
-
-
-def test_exact_duplicate_star_edges_are_linear_at_10k(spark):
-    """10k identical surfaces must complete with O(n) exact edges — the old
-    all-pairs self-join would emit ~50M pairs here (VERDICT r2 #4)."""
-    rows = [("PRODUCT", "mega dup")] * 10_000
-    pairs = candidate_pairs(_mentions(spark, rows), max_block=5)
-    n_pairs = pairs.count()
-    star = pairs.filter(F.col("src") == 0).count()
-    assert star == 9_999  # every member reaches the min-id hub
-    assert n_pairs < 100_000, n_pairs  # star + salted LSH blocks, never n^2
+    rows = [("PRODUCT", f"hot item number {i}") for i in range(40)]
+    df = _mentions(spark, rows)
+    unsalted = {(r.src, r.dst) for r in candidate_pairs(df, max_block=1000).collect()}
+    salted = {(r.src, r.dst) for r in candidate_pairs(df, max_block=10).collect()}
+    assert len(unsalted) == 40 * 39 // 2
+    assert salted < unsalted
 
 
 def test_blocking_is_deterministic(spark):

@@ -271,25 +271,101 @@ def test_entity_salience_deterministic_and_canonical(spark, outdir):
         assert ":" in r.entity and r.degree >= 1 and r.rank_scaled > 0
 
 
-def test_canon_map_artifact_and_salience_reuse(spark, outdir):
-    """run_graph persists the canonicalization decision as <out>/canon_map;
-    entity_salience reuses it when the mention fingerprint matches and
-    falls back to rebuilding (identical result) when the artifact is
-    missing."""
-    import shutil
+def test_read_path_raises_without_a_current_canon_map(spark, outdir):
+    """run_graph commits the canonicalization decision as <out>/canon_map
+    and the read path only reads it. With mention partitions committed
+    after the last graph build (stale), or with the map deleted (missing),
+    entity_salience and related_entities raise: they never re-link and
+    write no canon_map."""
+    import os
+    import re
 
-    from kgforge.pipeline import entity_salience
+    from pyspark.errors import AnalysisException
 
-    run_kg(spark, synth_source_files(spark, 150), outdir, n_parts=4)
-    cmap = spark.read.parquet(f"{outdir}/canon_map")
+    from kgforge.extract import with_clean
+    from kgforge.materialize import with_part_id
+    from kgforge.pipeline import entity_salience, related_entities
+
+    src = synth_source_files(spark, 150)
+    paths = _paths(outdir)
+    cmap_dir = f"{outdir}/canon_map"
+    reads = (
+        lambda: entity_salience(spark, paths, n_top=5),
+        lambda: related_entities(spark, paths, seeds=["PRODUCT:ጫማ"]),
+    )
+    early = with_part_id(with_clean(src), ["repo", "path"], 4).filter(
+        F.col("part_id") < 2
+    ).select(*src.columns)
+    run_kg(spark, early, outdir, n_parts=4)
+    cmap = spark.read.parquet(cmap_dir)
     assert set(cmap.columns) == {"entity_type", "norm_surface", "canon_surface"}
     assert cmap.count() > 0
+    committed = _parquet_content_hashes(cmap_dir)
 
-    p = _paths(outdir)
-    with_artifact = entity_salience(spark, p, n_top=15).collect()
-    shutil.rmtree(f"{outdir}/canon_map")
-    rebuilt = entity_salience(spark, p, n_top=15).collect()
-    assert with_artifact == rebuilt
+    # stale: the rest of the files extracted, graph phase not re-run
+    run_extraction(spark, src, paths, n_parts=4)
+    for read in reads:
+        with pytest.raises(RuntimeError, match=re.escape(paths.mentions)):
+            read()
+    assert _parquet_content_hashes(cmap_dir) == committed
+
+    # missing: the current mention state is built, then its map deleted
+    run_graph(spark, paths, n_parts=4)
+    shutil.rmtree(cmap_dir)
+    for read in reads:
+        with pytest.raises(AnalysisException):
+            read()
+    assert not os.path.exists(cmap_dir)
+
+
+def test_surface_cache_released_when_linking_fails(spark, outdir, monkeypatch):
+    """build_canon_map releases its surface cache even when the build
+    fails between the persist and the canon-map write."""
+    from kgforge import link
+
+    def failing_linker(*args, **kwargs):
+        raise RuntimeError("linker failed")
+
+    monkeypatch.setattr(link, "typed_link_surfaces", failing_linker)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    with pytest.raises(RuntimeError, match="linker failed"):
+        run_kg(spark, synth_source_files(spark, 60), outdir, n_parts=4)
+    assert cache.isEmpty()
+
+
+def test_linked_surfaces_share_one_entity_end_to_end(spark, outdir):
+    """A build whose linker finds an edge: "2,500 ብር" and "2500 ብር" are
+    one PRICE entity in the canon map, in the triples of both repos that
+    mention it, and as a related_entities seed."""
+    from kgforge.pipeline import related_entities
+
+    rows = [
+        ("r1", "a.txt", "c1", "amh_text", "ዋጋ 2,500 ብር\nሽያጭ ጫማ"),
+        ("r2", "b.txt", "c2", "amh_text", "ዋጋ 2500 ብር\nግዢ ቦርሳ"),
+    ]
+    src = spark.createDataFrame(rows, "repo string, path string, "
+                                "commit string, lang string, content string")
+    triples = run_kg(spark, src, outdir, n_parts=4)
+
+    prices = {
+        r.norm_surface: r.canon_surface
+        for r in spark.read.parquet(f"{outdir}/canon_map")
+        .filter(F.col("entity_type") == "PRICE").collect()
+    }
+    assert set(prices) == {"2,500 ብር", "2500 ብር"}
+    assert len(set(prices.values())) == 1
+    entity = "PRICE:" + prices["2500 ብር"]
+    declared = {
+        r.subj for r in triples.filter(
+            (F.col("pred") == PRED_DECLARES) & (F.col("obj") == entity)
+        ).collect()
+    }
+    assert declared == {"r1", "r2"}
+
+    related = related_entities(
+        spark, _paths(outdir), seeds=["PRICE:2500 ብር"]
+    ).collect()
+    assert [r.entity for r in related if r.is_seed] == [entity]
 
 
 def test_related_entities_seed_resolution_and_determinism(spark, outdir):
@@ -370,10 +446,10 @@ def test_corrupt_lineage_raises_instead_of_rebuilding(spark, outdir):
 # Job counts of the build and the resume re-run below in the test session
 # (local[4], 8 shuffle partitions), as upper bounds: a change that adds
 # jobs to run_kg must raise them on purpose. Both are the largest count
-# seen over 24 repeated runs: the build measured 42, the resume 6
+# seen over 20 repeated runs: the build measured 39, the resume 6
 # (adaptive execution may submit some query stages as jobs depending on
 # timing).
-TINY_BUILD_JOBS = 42
+TINY_BUILD_JOBS = 39
 TINY_RESUME_JOBS = 6
 
 
