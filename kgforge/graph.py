@@ -41,23 +41,34 @@ def symmetrize(pairs: DataFrame) -> DataFrame:
     ).select("_e.src", "_e.dst")
 
 
-def _partitioned_edges(pairs: DataFrame) -> DataFrame:
-    """Symmetrized edges hash-partitioned on src (the pregel join key), for
-    the caller to persist: every per-round/per-iteration equi-join and the
-    degree aggregation then reuse this partitioning instead of
-    re-shuffling the edge list each round (guide §2.4 "two operations
-    keyed the same way share one exchange"). Partition count follows the
-    session's spark.sql.shuffle.partitions, so the layout stays
-    scale-adaptive (conf-driven), not tuned to local mode.
+def _pagerank_edges(pairs: DataFrame) -> DataFrame:
+    """Symmetrized edges hash-partitioned on src (the pregel join key) into
+    spark.sql.shuffle.partitions partitions, for the caller to persist.
+    personalized_pagerank_scaled persists exactly this plan and
+    pagerank_scaled derives its node set from it, so one cache serves the
+    loop, the degrees and the node set, and ``pairs`` is evaluated once.
 
-    r7b: the cache is also SORTED on src — a cached relation preserves
-    its outputOrdering, so the per-iteration SortMergeJoin's edge-side
-    sort becomes a no-op (the static plan showed SMJ re-sorting the full
-    edge list every iteration); one sort at build time replaces
-    iters sorts at join time (q88 warm A/B 6.6s -> 4.3s at sf1)."""
+    The partition count is explicit on purpose. Every loop join is planned
+    onto this layout, which only works while the cache keeps a known hash
+    partitioning. Spark keeps a persisted plan's partitioning by default
+    (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning is off), so
+    a column-only repartition("src") yields the same layout there; where
+    that setting is on, AQE coalesces a column-only repartition, the
+    layout is lost and every iteration re-shuffles the edges (a 394-edge
+    query: 30 jobs instead of 21). A count AQE cannot change keeps the
+    plan shape under either setting."""
     edges = symmetrize(pairs)
     n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return edges.repartition(n, "src").sortWithinPartitions("src")
+    return edges.repartition(n, "src")
+
+
+def _partitioned_edges(pairs: DataFrame) -> DataFrame:
+    """The PageRank edge layout, also sorted on src within each partition,
+    for bfs_hops and harmonic_centrality to persist: their per-round
+    frontier joins reuse the src partitioning instead of re-shuffling the
+    edge list each round, and a cached relation keeps its ordering, so a
+    sort-merge frontier join needs no edge-side sort."""
+    return _pagerank_edges(pairs).sortWithinPartitions("src")
 
 
 def pagerank_scaled(
@@ -69,13 +80,12 @@ def pagerank_scaled(
 
     ``pairs``: DataFrame[p1, p2] of distinct undirected edges (isolated
     nodes — absent from every edge — are out of scope, as in any
-    edge-list formulation). Returns DataFrame[node, d, r] with r the rank
-    scaled by PR_SCALE; no rows for an empty pair list. It is
-    personalized_pagerank_scaled with every node a source.
+    edge-list formulation). Returns DataFrame[node, d, r, is_src] with r
+    the rank scaled by PR_SCALE (is_src is 1 on every row); no rows for an
+    empty pair list. It is personalized_pagerank_scaled with every node a
+    source.
     """
-    # the same plan personalized_pagerank_scaled caches as its edge list,
-    # so the node set is read from that cache instead of re-running pairs
-    nodes = _partitioned_edges(pairs).select(F.col("src").alias("node"))
+    nodes = _pagerank_edges(pairs).select(F.col("src").alias("node"))
     return personalized_pagerank_scaled(pairs, nodes, iters, damping)
 
 
@@ -91,8 +101,10 @@ def personalized_pagerank_scaled(
 
     ``sources``: DataFrame[node]; seeds absent from the edge list are
     ignored (an isolated seed has no outgoing mass). Returns
-    DataFrame[node, d, r], r scaled by PR_SCALE; no rows when no source
-    is in the edge list.
+    DataFrame[node, d, r, is_src]: r scaled by PR_SCALE, is_src 1 for a
+    source node and 0 otherwise, so a caller can rank and flag seeds from
+    this one relation without joining the sources again. No rows when no
+    source is in the edge list. The result is eagerly localCheckpoint'ed.
 
     Recurrence (all BIGINT floor arithmetic — no float accumulation, so
     the result is independent of partitioning and engine):
@@ -100,20 +112,29 @@ def personalized_pagerank_scaled(
         r'(v)  = [v in S] * (den-num)*T // (den*|S|)
                  + num * sum_{u->v}(r(u) div d(u)) div den
 
-    Scale shape (q88 docstring has the full argument): edges and the
-    seed-marked degrees are persisted for the loop and released once the
-    result is checkpointed; each iteration is one co-partitioned equi-join
-    + one partial-agg shuffle on dst. The driver never touches rows.
+    Scale shape: the edge list (_pagerank_edges, hash-partitioned on src)
+    and the seed-marked degrees derived from it are persisted for the loop
+    and released once the result is checkpointed; both keep the edge
+    cache's partitioning. The sources, the rank relation and the
+    per-iteration sums join onto that layout as shuffled-hash builds (the
+    shuffle_hash hints), so AQE plans no broadcast and no second exchange:
+    an iteration's only exchange is the partial-agg shuffle on dst. At a
+    few hundred edges a query costs its number of stages (each broadcast
+    or shuffle stage is its own AQE job), not its data, and this shape
+    minimizes them. The driver never touches rows.
     """
     num, den = damping
-    edges = _partitioned_edges(pairs).persist()
+    edges = _pagerank_edges(pairs).persist()
     deg = (
         edges.groupBy("src")
         .agg(F.count("*").alias("d"))
         .withColumnRenamed("src", "node")
     )
     marked = deg.join(
-        sources.select("node").distinct().withColumn("is_src", F.lit(1)),
+        sources.select("node")
+        .distinct()
+        .withColumn("is_src", F.lit(1))
+        .hint("shuffle_hash"),
         "node",
         "left",
     ).select(
@@ -122,7 +143,7 @@ def personalized_pagerank_scaled(
     n_src = marked.filter(F.col("is_src") == 1).count()
     if n_src == 0:
         empty = marked.select(
-            "node", "d", F.lit(0).cast("long").alias("r")
+            "node", "d", F.lit(0).cast("long").alias("r"), "is_src"
         ).limit(0).localCheckpoint(eager=True)
         marked.unpersist()
         edges.unpersist()
@@ -135,10 +156,13 @@ def personalized_pagerank_scaled(
         (F.col("is_src") * F.lit(PR_SCALE // n_src)).cast("long").alias("r"),
     )
     for _ in range(iters):
+        r = r.hint("shuffle_hash")
         contrib = edges.join(r, edges["src"] == r["node"]).select(
             F.col("dst").alias("cnode"), F.expr("r div d").alias("c")
         )
-        s = contrib.groupBy("cnode").agg(F.sum("c").alias("s"))
+        s = contrib.groupBy("cnode").agg(F.sum("c").alias("s")).hint(
+            "shuffle_hash"
+        )
         r = marked.join(s, marked["node"] == s["cnode"], "left").select(
             "node",
             "d",
@@ -149,7 +173,7 @@ def personalized_pagerank_scaled(
             ).cast("long").alias("r"),
         )
     # materialize, then free the caches
-    out = r.select("node", "d", "r").localCheckpoint(eager=True)
+    out = r.select("node", "d", "r", "is_src").localCheckpoint(eager=True)
     marked.unpersist()
     edges.unpersist()
     return out
@@ -351,8 +375,8 @@ def label_propagation(
     The driver sees one changed-label count per round (fixpoint test).
     """
     # LPA's per-round join is keyed on dst (neighbor side), so the edge
-    # cache is pre-partitioned AND pre-sorted on THAT key (r7; see
-    # _partitioned_edges for the sort rationale)
+    # cache is pre-partitioned AND pre-sorted on THAT key (r7; the same
+    # layout _partitioned_edges gives BFS on src)
     edges = symmetrize(pairs)
     _n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     edges = edges.repartition(_n, "dst").sortWithinPartitions("dst").persist()

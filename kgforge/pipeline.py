@@ -284,7 +284,15 @@ def related_entities(
 
     Returns [entity, degree, rank_scaled, is_seed], rank-descending with
     a total tie-break, deterministic at any parallelism (scaled-integer
-    arithmetic end to end).
+    arithmetic end to end). is_seed is the seed flag PageRank carries
+    through its checkpoint, so the top ``n_top`` come from that one
+    relation with no second join against the seeds.
+
+    Reads one batch: the graph is built from ``paths.mentions`` and the
+    canon map beside it. Over an incremental KG (``run_kg(upsert=True,
+    triples_path=shared)``) that is the batch whose paths are given, not
+    the shared triple table, so entities mentioned only in other batches
+    are absent (ROADMAP item 3).
     """
     from kgforge.graph import personalized_pagerank_scaled
     from kgforge.triples import entity_key
@@ -311,14 +319,12 @@ def related_entities(
         .distinct()
     )
     r = personalized_pagerank_scaled(pairs, seed_nodes, iters=iters)
-    seed_marked = seed_nodes.withColumn("is_seed", F.lit(True))
     return (
-        r.join(seed_marked, "node", "left")
-        .select(
+        r.select(
             F.col("node").alias("entity"),
             F.col("d").alias("degree"),
             F.col("r").alias("rank_scaled"),
-            F.coalesce("is_seed", F.lit(False)).alias("is_seed"),
+            (F.col("is_src") == 1).alias("is_seed"),
         )
         .orderBy(F.col("rank_scaled").desc(), "entity")
         .limit(n_top)
@@ -400,7 +406,10 @@ def run_kg(
     table instead of overwriting; ``triples_path`` points batches at a
     SHARED triple table while each batch keeps its own mentions/lineage
     under its ``out_dir`` (the incremental-ingestion layout: per-batch
-    work dirs, one long-lived graph table)."""
+    work dirs, one long-lived graph table). Only the triples are shared:
+    each batch links and canonicalizes its own mentions, and
+    entity_salience/related_entities over a batch's paths see that batch
+    only (ROADMAP item 3)."""
     paths = KGPaths(
         mentions=f"{out_dir}/mentions",
         triples=triples_path or f"{out_dir}/triples",

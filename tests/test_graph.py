@@ -313,6 +313,44 @@ def test_personalized_pagerank_locality(spark):
     assert got[5] == 0  # 5 hops away, 4 iterations
 
 
+def test_pagerank_pair_input_is_computed_once(spark):
+    """The pair plan (in the pipeline: the co-mention self-join) is
+    evaluated once per PageRank call: the edge cache serves the loop, the
+    degrees and pagerank_scaled's node set alike."""
+    from pyspark.sql import functions as F
+
+    from kgforge.graph import personalized_pagerank_scaled
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        acc.add(1)
+        return x
+
+    pairs = _random_pairs(n_nodes=12, n_edges=20)
+    raw = _pairs_df(spark, pairs)
+    counted_pairs = raw.select(F.udf(counted, "long")("p1").alias("p1"), "p2")
+    pagerank_scaled(counted_pairs).collect()
+    assert acc.value == len(pairs)
+    personalized_pagerank_scaled(
+        counted_pairs, _sources_df(spark, [0, 5])
+    ).collect()
+    assert acc.value == 2 * len(pairs)
+
+
+def test_personalized_pagerank_seed_flag(spark):
+    """is_src marks exactly the seeds that are in the edge list; every
+    other node carries 0."""
+    from kgforge.graph import personalized_pagerank_scaled
+
+    pairs = _random_pairs(n_nodes=25, n_edges=55)
+    rows = personalized_pagerank_scaled(
+        _pairs_df(spark, pairs), _sources_df(spark, [0, 3, 7, 99])
+    ).collect()
+    assert {r.node for r in rows if r.is_src == 1} == {0, 3, 7}
+    assert {r.is_src for r in rows} == {0, 1}
+
+
 def test_personalized_pagerank_no_graph_seeds_empty(spark):
     from kgforge.graph import personalized_pagerank_scaled
 

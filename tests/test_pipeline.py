@@ -479,3 +479,39 @@ def test_run_kg_jobs_are_grouped_and_bounded(spark, tmp_path):
 
     assert jobs("test-run-kg-build") <= TINY_BUILD_JOBS
     assert jobs("test-run-kg-resume") <= TINY_RESUME_JOBS
+
+
+# Job count of one related_entities call on the tiny KG below, in the test
+# session (local[4], 8 shuffle partitions), as an upper bound: every one of
+# 20 repeated calls ran 21 jobs (the PageRank loop before its joins were
+# kept on the edge cache's layout and the seed flag carried through the
+# checkpoint ran 34 on the same KG).
+TINY_QUERY_JOBS = 21
+
+
+def test_related_entities_jobs_are_grouped_and_bounded(spark, tmp_path):
+    """Every job of a related_entities query runs in the caller's job
+    group, and one query runs no more jobs than the pinned count."""
+    from kgforge.pipeline import entity_salience, related_entities
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()  # job events reach the tracker async
+    outdir = str(tmp_path / "kg")
+    run_kg(spark, synth_source_files(spark, 60), outdir, n_parts=4)
+    p = _paths(outdir)
+    seed = entity_salience(spark, p, n_top=1).collect()[0].entity
+    warm = related_entities(spark, p, seeds=[seed], n_top=5).collect()
+
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("test-related-entities", "test-related-entities")
+    try:
+        rows = related_entities(spark, p, seeds=[seed], n_top=5).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    assert rows == warm
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert len(tracker.getJobIdsForGroup("test-related-entities")) <= TINY_QUERY_JOBS

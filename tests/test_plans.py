@@ -332,3 +332,61 @@ def test_locf_windows_are_bucketed_not_per_series(spark):
         w for w in windows if "day" in w and "bucket" not in w
     ]
     assert not per_series, per_series
+
+
+def _operators(plan) -> list[str]:
+    """Operator names of an executed physical plan, descending through
+    adaptive plans and query stages but not into cached relations: a
+    persisted input shows up as one InMemoryTableScan/TableCacheQueryStage
+    leaf, not as the plan that built it."""
+    name = plan.nodeName()
+    if name in ("InMemoryTableScan", "TableCacheQueryStage"):
+        return [name]
+    if name == "AdaptiveSparkPlan":
+        kids = [plan.executedPlan()]
+    elif name.endswith("QueryStage"):
+        kids = [plan.plan()]
+    else:
+        ch = plan.children()
+        kids = [ch.apply(i) for i in range(ch.size())]
+    return [name] + [op for k in kids for op in _operators(k)]
+
+
+def test_pagerank_iteration_plans_one_exchange(spark, monkeypatch):
+    """ROADMAP item 4: each personalized-PageRank iteration keeps both of
+    its joins on the edge cache's layout. In the executed plan of the
+    checkpointed result, every join is a ShuffledHashJoin, nothing is
+    broadcast, and the only Exchange per iteration is the per-dst sum's
+    (the cached edge and seed-marked relations are leaves here)."""
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from kgforge.graph import personalized_pagerank_scaled
+
+    pairs = sorted({
+        (min(a, b), max(a, b))
+        for a, b in (
+            (h[0] % 30, h[1] % 30)
+            for h in (hashlib.md5(f"p{i}".encode()).digest() for i in range(80))
+        )
+        if a != b
+    })
+    pairs_df = spark.createDataFrame(pairs, "p1 long, p2 long")
+    sources = spark.createDataFrame([(0,), (7,)], "node long")
+    checkpointed = []
+    real = type(pairs_df).localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        checkpointed.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(pairs_df), "localCheckpoint", capture)
+    iters = 3
+    out = personalized_pagerank_scaled(pairs_df, sources, iters=iters)
+    assert out.filter(F.col("r") > 0).count() > 0
+    ops = _operators(checkpointed[-1]._jdf.queryExecution().executedPlan())
+    joins = [op for op in ops if "Join" in op]
+    assert joins == ["ShuffledHashJoin"] * (2 * iters), ops
+    assert "BroadcastExchange" not in ops, ops
+    assert ops.count("Exchange") == iters, ops
