@@ -117,11 +117,12 @@ def personalized_pagerank_scaled(
     and released once the result is checkpointed; both keep the edge
     cache's partitioning. The sources, the rank relation and the
     per-iteration sums join onto that layout as shuffled-hash builds (the
-    shuffle_hash hints), so AQE plans no broadcast and no second exchange:
-    an iteration's only exchange is the partial-agg shuffle on dst. At a
-    few hundred edges a query costs its number of stages (each broadcast
-    or shuffle stage is its own AQE job), not its data, and this shape
-    minimizes them. The driver never touches rows.
+    shuffle_hash hints; each build side holds at most one row per node),
+    so AQE plans no broadcast and no second exchange: an iteration's only
+    exchange is the partial-agg shuffle on dst. At a few hundred edges a
+    query costs its number of stages (each broadcast or shuffle stage is
+    its own AQE job), not its data, and this shape minimizes them. The
+    driver never touches rows.
     """
     num, den = damping
     edges = _pagerank_edges(pairs).persist()

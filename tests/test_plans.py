@@ -364,15 +364,13 @@ def test_pagerank_iteration_plans_one_exchange(spark, monkeypatch):
 
     from kgforge.graph import personalized_pagerank_scaled
 
-    pairs = sorted({
-        (min(a, b), max(a, b))
-        for a, b in (
-            (h[0] % 30, h[1] % 30)
-            for h in (hashlib.md5(f"p{i}".encode()).digest() for i in range(80))
-        )
-        if a != b
-    })
-    pairs_df = spark.createDataFrame(pairs, "p1 long, p2 long")
+    pairs = set()
+    for i in range(80):  # seeded pseudo-random graph on 30 nodes
+        h = hashlib.md5(f"p{i}".encode()).digest()
+        a, b = h[0] % 30, h[1] % 30
+        if a != b:
+            pairs.add((min(a, b), max(a, b)))
+    pairs_df = spark.createDataFrame(sorted(pairs), "p1 long, p2 long")
     sources = spark.createDataFrame([(0,), (7,)], "node long")
     checkpointed = []
     real = type(pairs_df).localCheckpoint
