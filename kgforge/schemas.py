@@ -9,8 +9,6 @@ pushdown works, and the driver's schema checks are deterministic.
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -33,27 +31,6 @@ SOURCE_FILES = StructType(
     ]
 )
 
-# source_files + derived cleaning/hash columns (data_cleaner.py:86-98 shape)
-CLEANED_FILES = StructType(
-    SOURCE_FILES.fields
-    + [
-        StructField("content_sha256", StringType(), False),
-        StructField("clean_content", StringType(), False),
-    ]
-)
-
-# CoNLL/BIO sentence corpus (data_pipeline.py:138-163 -> array columns)
-SENTENCES = StructType(
-    [
-        StructField("sent_id", LongType(), False),
-        StructField("repo", StringType(), True),
-        StructField("path", StringType(), True),
-        StructField("commit", StringType(), True),
-        StructField("tokens", ArrayType(StringType(), False), False),
-        StructField("tags", ArrayType(StringType(), False), False),
-    ]
-)
-
 # Entity mention relation (HF pipeline output shape, scorecard_engine.py:54-57)
 MENTIONS = StructType(
     [
@@ -68,46 +45,12 @@ MENTIONS = StructType(
     ]
 )
 
-# Mention with a stable id + normalized surface (linking input)
-MENTIONS_KEYED = StructType(
-    [
-        StructField("mention_id", LongType(), False),
-        StructField("repo", StringType(), False),
-        StructField("path", StringType(), False),
-        StructField("commit", StringType(), False),
-        StructField("entity_type", StringType(), False),
-        StructField("surface", StringType(), False),
-        StructField("norm_surface", StringType(), False),
-        StructField("start", IntegerType(), False),
-        StructField("end", IntegerType(), False),
-    ]
-)
-
 # Candidate / scored linking edges
 EDGES = StructType(
     [
         StructField("src", LongType(), False),
         StructField("dst", LongType(), False),
         StructField("sim", DoubleType(), False),
-    ]
-)
-
-# Connected-components assignment
-COMPONENTS = StructType(
-    [
-        StructField("mention_id", LongType(), False),
-        StructField("component_id", LongType(), False),
-    ]
-)
-
-# The triple table (north rule: (subj, pred, obj) + provenance partition key)
-TRIPLES = StructType(
-    [
-        StructField("subj", StringType(), False),
-        StructField("pred", StringType(), False),
-        StructField("obj", StringType(), False),
-        StructField("repo", StringType(), True),
-        StructField("part_id", IntegerType(), False),
     ]
 )
 

@@ -126,11 +126,6 @@ def synth_source_files(
     return base.mapInPandas(gen, schema=SOURCE_FILES)
 
 
-def write_synth_corpus(spark: SparkSession, n: int, path: str) -> None:
-    """Materialize a corpus to parquet (bench input staging)."""
-    synth_source_files(spark, n).write.mode("overwrite").parquet(path)
-
-
 def with_sha256(df: DataFrame) -> DataFrame:
     """Per-row invariant column (telegram_scraper.py:151-155 semantics):
     ``sha2(content, 256)`` must equal Python hashlib.sha256 — tested in

@@ -121,3 +121,61 @@ def test_recommendations_rank_by_true_f1():
     # weakest three by true F1: C (0) < B (0.391) < A (0.444); D excluded
     assert line.index("C (") < line.index("B (") < line.index("A (")
     assert "D (" not in line
+
+
+# The reference's comparison-table shape (compare_model.py:430-440):
+# model, f1, inference_ms, size_mb, train_min.
+_CANDIDATES = [
+    ("afroxlmr-large", 0.9231, 31.0, 2200.0, 96.0),
+    ("xlmr-base", 0.9045, 17.0, 1100.0, 54.0),
+    ("mbert-cased", 0.8712, 14.0, 680.0, 47.0),
+    ("distil-mbert", 0.8423, 9.0, 540.0, 31.0),
+    ("afro-xlmr-mini", 0.8120, 6.0, 290.0, 22.0),
+]
+
+_RANKING_SQL = """
+WITH scored AS (
+    SELECT model,
+           round(0.5 * f1
+               + 0.2 * (1 - inference_ms / max(inference_ms) OVER ())
+               + 0.2 * (1 - size_mb / max(size_mb) OVER ())
+               + 0.1 * (1 - train_min / max(train_min) OVER ()), 6)
+             AS weighted_score
+    FROM cand
+)
+SELECT model, weighted_score,
+       row_number() OVER (ORDER BY weighted_score DESC, model) AS rank
+FROM scored ORDER BY rank
+"""
+
+
+def test_weighted_ranking_matches_duckdb(spark, same_rows):
+    """compare.weighted_ranking (0.5*F1 + 0.2*speed + 0.2*size + 0.1*time,
+    each cost max-normalized over the candidate set) equals the DuckDB
+    re-derivation: same row count, same columns, same value multiset
+    (cells stringified, columns sorted by name)."""
+    import duckdb
+
+    from kgforge.compare import weighted_ranking
+
+    cand = spark.createDataFrame(
+        _CANDIDATES, "model string, f1 double, inference_ms double, "
+        "size_mb double, train_min double",
+    )
+    ranked = weighted_ranking(cand).select(
+        "model", "weighted_score", F.col("rank").cast("long").alias("rank")
+    )
+    got = ranked.collect()
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE cand(model VARCHAR, f1 DOUBLE, inference_ms DOUBLE, "
+        "size_mb DOUBLE, train_min DOUBLE)"
+    )
+    con.executemany("INSERT INTO cand VALUES (?, ?, ?, ?, ?)", _CANDIDATES)
+    cur = con.execute(_RANKING_SQL)
+    want = cur.fetchall()
+    want_cols = [d[0] for d in cur.description]
+
+    assert len(got) == len(_CANDIDATES)
+    same_rows(ranked.columns, got, want_cols, want)
