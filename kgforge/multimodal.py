@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     IntegerType,
     LongType,
@@ -961,137 +960,6 @@ MEDIA_FEATURES = StructType(
         StructField("features", ArrayType(DoubleType()), False),
     ]
 )
-
-
-def read_zip_members(spark, path_glob: str) -> DataFrame:
-    """ZIP archive SOURCE (S10 territory, real stdlib zipfile): binaryFile
-    scan of archives -> mapInPandas unpack -> one row per member
-    (archive, member, n_bytes, payload). The reference walks image folders
-    and zips artifacts (data_cleaner.py:102-182); here the archive itself
-    is a first-class scannable container. Each archive is one task —
-    archives parallelize across executors; a single mega-archive should be
-    split upstream (same contract as the CoNLL wholetext scan)."""
-    import zipfile
-
-    files = spark.read.format("binaryFile").load(path_glob)
-
-    schema = StructType(
-        [
-            StructField("archive", StringType(), False),
-            StructField("member", StringType(), False),
-            StructField("n_bytes", IntegerType(), False),
-            StructField("payload", BinaryType(), False),
-        ]
-    )
-
-    chunk_members = 256  # bound resident rows: never the whole input batch
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Yield fixed-size member chunks, never an accumulated whole-batch
-        # list: a batch of many archives (or one many-member archive) would
-        # otherwise hold every decompressed member in one task's memory at
-        # once (VERDICT r2 #5). Peak residency = one archive's ZipFile +
-        # chunk_members decompressed members.
-        rows: list = []
-        for pdf in batches:
-            for p, blob in zip(pdf["path"], pdf["content"]):
-                try:
-                    zf = zipfile.ZipFile(io.BytesIO(bytes(blob)))
-                except zipfile.BadZipFile:
-                    continue  # skip-on-error, like the OCR loop
-                for info in zf.infolist():
-                    if info.is_dir():
-                        continue
-                    data = zf.read(info.filename)
-                    rows.append((p, info.filename, len(data), bytearray(data)))
-                    if len(rows) >= chunk_members:
-                        yield pd.DataFrame(
-                            rows,
-                            columns=["archive", "member", "n_bytes", "payload"],
-                        )
-                        rows = []
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=["archive", "member", "n_bytes", "payload"]
-            )
-
-    return files.select("path", "content").mapInPandas(run, schema=schema)
-
-
-ZIP_MANIFEST = StructType(
-    [
-        StructField("archive", StringType(), False),
-        StructField("file", StringType(), False),
-        StructField("n_members", IntegerType(), False),
-        StructField("n_bytes", LongType(), False),
-        StructField("sha256", StringType(), False),
-    ]
-)
-
-
-def write_zip_archives(
-    df: DataFrame,
-    out_dir: str,
-    archive_col: str = "archive",
-    member_col: str = "member",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """ZIP archive SINK (S10's second half — the reference zips channel
-    images in memory, telegram_scraper.py:230-254): one real ``.zip`` file
-    per archive key.
-
-    Spark-first shape: ``groupBy(archive).applyInPandas`` routes every
-    member of an archive to exactly one task (memory bounded by ONE
-    archive, the same in-memory-zip contract as the reference; split
-    mega-archives by key upstream), archives parallelize across executors.
-    The zip bytes are DETERMINISTIC (members sorted, fixed 1980 timestamps,
-    stored uncompressed-size-independent DEFLATE) and each file is
-    committed with write-to-temp + atomic ``os.replace`` — a retried task
-    rewrites byte-identical content, so the sink is idempotent without a
-    Hadoop committer. ``out_dir`` must be a filesystem all executors share
-    (the standard Spark output-directory contract).
-
-    Returns the manifest (archive=raw key, file=output filename, n_members,
-    n_bytes, sha256); running an action on it performs the write. Archive
-    keys are used as file names; a key containing a path separator is
-    sanitized AND suffixed with sha1(raw_key)[:8] so distinct keys like
-    ``a/b`` and ``a_b`` cannot collide onto one output file (ADVICE r3).
-    """
-    import hashlib
-    import os
-    import zipfile
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(member_col, kind="mergesort")
-        buf = io.BytesIO()
-        with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
-            for m, p in zip(pdf[member_col], pdf[payload_col]):
-                zi = zipfile.ZipInfo(str(m), date_time=(1980, 1, 1, 0, 0, 0))
-                zi.compress_type = zipfile.ZIP_DEFLATED
-                z.writestr(zi, bytes(p))
-        data = buf.getvalue()
-        raw = str(pdf[archive_col].iloc[0])
-        name = raw.replace(os.sep, "_").replace("/", "_")
-        if name != raw:  # sanitization is lossy -> make the filename injective
-            name = f"{name}-{hashlib.sha1(raw.encode('utf-8')).hexdigest()[:8]}"
-        final = os.path.join(out_dir, f"{name}.zip")
-        tmp = f"{final}.tmp-{os.getpid()}"
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, final)  # atomic on one FS; idempotent on retry
-        return pd.DataFrame(
-            [[raw, f"{name}.zip", len(pdf), len(data),
-              hashlib.sha256(data).hexdigest()]],
-            columns=["archive", "file", "n_members", "n_bytes", "sha256"],
-        )
-
-    return (
-        df.select(archive_col, member_col, payload_col)
-        .groupBy(archive_col)
-        .applyInPandas(build, schema=ZIP_MANIFEST)
-    )
 
 
 def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:

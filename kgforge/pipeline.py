@@ -200,7 +200,7 @@ def entity_salience(
 
     Scale shape: the doc->entity edge build is one distinct + one
     co-partitioned self-equi-join on the doc key (bounded entities per
-    document, so linear in the mention count); PageRank is
+    document, so linear like q81's co-purchase build); PageRank is
     iters x (equi-join + partial-agg shuffle). Nothing driver-side but the
     node count.
     """
@@ -224,7 +224,8 @@ def _entity_comention_pairs(spark, paths: KGPaths):
     canonical entities — the shared graph both entity_salience (global
     PageRank) and related_entities (personalized PageRank) rank over.
     One distinct + one co-partitioned self-equi-join on the doc key
-    (bounded entities per document, so linear in the mention count).
+    (bounded entities per document, so linear like q81's co-purchase
+    build).
 
     ``canon_map`` is the one run_graph committed. The read path never
     links: a map not built from the current mention state (same
@@ -273,8 +274,7 @@ def related_entities(
     canonical co-mention graph entity_salience uses, with teleport mass
     returning to the SEED entities — "what is most related to these
     entities in this KG", the query a KG consumer actually asks
-    (kgforge/graph.py::personalized_pagerank_scaled, which equals a
-    bit-exact Python mirror in tests/test_graph.py).
+    (kgforge/graph.py::personalized_pagerank_scaled; driver-gated as q99).
 
     ``seeds`` are '<TYPE>:<surface>' strings. Each surface is normalized
     exactly like mention surfaces (lower + whitespace collapse) and

@@ -77,7 +77,7 @@ def vendor_metrics(posts: DataFrame, mentions: DataFrame) -> DataFrame:
     # r7: hash-aggregated max(struct(views, -message_id)) instead of a
     # row_number window — a handful of vendor channels means a handful of
     # window partitions (one task each, full sort), while the struct-max
-    # partial-aggregates map-side with no sort; same rows.
+    # partial-aggregates map-side with no sort; same rows (q03's argument).
     top = (
         p.groupBy("channel")
         .agg(

@@ -47,8 +47,8 @@ def test_json_sink(spark, tmp_path):
 
 
 def test_binary_file_scan(spark, tmp_path):
-    """S5: binaryFile source (the OCR-stage input plumbing,
-    data_cleaner.py:102-141): one row per matching file, exact lengths."""
+    """S5: binaryFile source + mapInPandas decode stub (the OCR-stage
+    plumbing, data_cleaner.py:102-141)."""
     blobs = tmp_path / "media"
     blobs.mkdir()
     payloads = {}
@@ -64,6 +64,19 @@ def test_binary_file_scan(spark, tmp_path):
     assert set(df.columns) == {"path", "modificationTime", "length", "content"}
     got = {r.path.split("/")[-1]: r.length for r in df.collect()}
     assert got == payloads
+
+    from kgforge.multimodal import MEDIA_META, decode_stub
+    import pandas as pd
+
+    def run(batches):
+        for pdf in batches:
+            metas = [decode_stub(b) for b in pdf["content"]]
+            out = pd.DataFrame(metas)
+            out.insert(0, "doc_id", range(len(out)))
+            yield out
+
+    meta = df.select("content").mapInPandas(run, schema=MEDIA_META)
+    assert sorted(r.n_bytes for r in meta.collect()) == sorted(payloads.values())
 
 
 def test_timestamp_tz_format(spark):

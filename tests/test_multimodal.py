@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from kgforge.multimodal import (
     decode_ppm,
@@ -281,56 +280,6 @@ def test_spark_media_features_parallelism_invariant(spark):
     assert fa == fb and len(fa) == 24
 
 
-def test_zip_source_reads_members_and_skips_bad_archives(spark, tmp_path):
-    """ZIP archive source: archives -> one row per member; corrupt archives
-    skipped; media members decodable end-to-end (zip -> decode_real)."""
-    import zipfile
-
-    from kgforge.multimodal import read_zip_members
-
-    zdir = tmp_path / "zips"
-    zdir.mkdir()
-    with zipfile.ZipFile(zdir / "a.zip", "w") as z:
-        z.writestr("img/one.ppm", encode_ppm(6, 4, seed=1))
-        z.writestr("notes.txt", b"hello world")
-    with zipfile.ZipFile(zdir / "b.zip", "w") as z:
-        z.writestr("snd/two.wav", encode_wav(200, seed=2))
-    (zdir / "broken.zip").write_bytes(b"not a zip at all")
-
-    members = read_zip_members(spark, str(zdir / "*.zip"))
-    rows = {r.member: r for r in members.collect()}
-    assert set(rows) == {"img/one.ppm", "notes.txt", "snd/two.wav"}
-    assert bytes(rows["notes.txt"].payload) == b"hello world"
-
-    # members feed straight into the real decoder
-    media = members.filter(members.member != "notes.txt").select(
-        F.monotonically_increasing_id().alias("doc_id"), "payload"
-    )
-    kinds = {r.kind for r in extract_media_features(media).collect()}
-    assert kinds == {"image/ppm", "audio/wav"}
-
-
-def test_zip_source_many_members_chunked(spark, tmp_path):
-    """A many-member archive (> the 256-row chunk) comes back complete:
-    the source yields bounded member chunks, never an accumulated
-    whole-batch list (VERDICT r2 #5 memory bound)."""
-    import zipfile
-
-    from kgforge.multimodal import read_zip_members
-
-    zdir = tmp_path / "zips"
-    zdir.mkdir()
-    n = 700  # > 2 chunks of 256
-    with zipfile.ZipFile(zdir / "big.zip", "w") as z:
-        for i in range(n):
-            z.writestr(f"m/{i:04d}.txt", f"payload-{i}".encode())
-    members = read_zip_members(spark, str(zdir / "*.zip"))
-    assert members.count() == n
-    got = {r.member: bytes(r.payload) for r in members.collect()}
-    assert got["m/0000.txt"] == b"payload-0"
-    assert got[f"m/{n-1:04d}.txt"] == f"payload-{n-1}".encode()
-
-
 def test_riff_non_wave_and_truncated_wav_are_skipped(spark):
     """RIFF-but-not-WAVE (AVI/WebP) and truncated WAV blobs must SKIP via
     ValueError, not crash the task with wave.Error/EOFError (ADVICE r2)."""
@@ -353,65 +302,6 @@ def test_riff_non_wave_and_truncated_wav_are_skipped(spark):
     )
     out = extract_media_features(df).collect()
     assert {r.doc_id for r in out} == {1}
-
-
-def test_zip_sink_roundtrip_deterministic_idempotent(spark, tmp_path):
-    """S10 sink: real per-key .zip files, byte-deterministic (sorted
-    members, fixed timestamps), idempotent on re-run, and readable back
-    through the ZIP source with payloads intact."""
-    from kgforge.multimodal import read_zip_members, write_zip_archives
-
-    rows = [
-        ("chan_a", "img/one.ppm", bytearray(encode_ppm(6, 4, seed=1))),
-        ("chan_a", "notes.txt", bytearray(b"hello world")),
-        ("chan_b", "snd/two.wav", bytearray(encode_wav(200, seed=2))),
-    ]
-    df = spark.createDataFrame(
-        rows, "archive string, member string, payload binary"
-    )
-    out = str(tmp_path / "zips")
-    m1 = {r.archive: r for r in write_zip_archives(df, out).collect()}
-    assert set(m1) == {"chan_a", "chan_b"}
-    assert m1["chan_a"].n_members == 2 and m1["chan_b"].n_members == 1
-
-    # re-run: byte-identical archives (same sha256), no duplicate files
-    m2 = {r.archive: r for r in write_zip_archives(df, out).collect()}
-    assert {a: r.sha256 for a, r in m1.items()} == {
-        a: r.sha256 for a, r in m2.items()
-    }
-    import os
-
-    assert sorted(os.listdir(out)) == ["chan_a.zip", "chan_b.zip"]
-
-    back = read_zip_members(spark, f"{out}/*.zip")
-    got = {(r.archive.split("/")[-1], r.member): bytes(r.payload) for r in back.collect()}
-    assert got[("chan_a.zip", "notes.txt")] == b"hello world"
-    assert got[("chan_b.zip", "snd/two.wav")] == bytes(rows[2][2])
-    assert len(got) == 3
-
-
-def test_zip_sink_separator_keys_do_not_collide(spark, tmp_path):
-    """ADVICE r3: 'a/b' and 'a_b' both sanitize to 'a_b' — the sink must
-    write two distinct files (separator keys get an injective hash suffix)
-    and the manifest must report the RAW key plus the filename used."""
-    import os
-
-    from kgforge.multimodal import write_zip_archives
-
-    df = spark.createDataFrame(
-        [
-            ("a/b", "m1.txt", bytearray(b"from slash key")),
-            ("a_b", "m1.txt", bytearray(b"from underscore key")),
-        ],
-        "archive string, member string, payload binary",
-    )
-    out = str(tmp_path / "zips")
-    manifest = {r.archive: r for r in write_zip_archives(df, out).collect()}
-    assert set(manifest) == {"a/b", "a_b"}
-    files = sorted(os.listdir(out))
-    assert len(files) == 2 and manifest["a_b"].file == "a_b.zip"
-    assert manifest["a/b"].file != "a_b.zip"
-    assert {manifest["a/b"].file, manifest["a_b"].file} == set(files)
 
 
 def test_decode_envelope_rejects_photo_scale_inputs(spark):

@@ -201,42 +201,6 @@ def test_upsert_same_changes_twice_is_byte_identical(spark, tmp_path):
     assert spark.read.parquet(path).count() == n_first
 
 
-def test_upsert_empty_change_set_is_noop(spark, tmp_path):
-    """Upserting zero changes must leave the table untouched (no partition
-    is 'touched', nothing is rewritten)."""
-    from kgforge.materialize import upsert_partitioned
-
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [("a", "p", "x", "r1")],
-        "subj string, pred string, obj string, repo string",
-    )
-    upsert_partitioned(base, path, ["subj", "pred", "obj"], n_parts=4)
-    before = {tuple(r) for r in spark.read.parquet(path).collect()}
-    upsert_partitioned(
-        base.filter(F.lit(False)), path, ["subj", "pred", "obj"], n_parts=4
-    )
-    assert {tuple(r) for r in spark.read.parquet(path).collect()} == before
-
-
-def test_upsert_refuses_mismatched_n_parts(spark, tmp_path):
-    """A batch merged with a different n_parts than the table was built
-    with must FAIL FAST (the join would otherwise insert duplicates while
-    stale rows survive)."""
-    from kgforge.materialize import upsert_partitioned
-
-    path = str(tmp_path / "tbl")
-    rows = [(f"s{i}", "p", f"o{i}", "r") for i in range(40)]
-    base = spark.createDataFrame(
-        rows, "subj string, pred string, obj string, repo string"
-    )
-    upsert_partitioned(base, path, ["subj", "pred", "obj"], n_parts=64)
-    with pytest.raises(ValueError, match="n_parts"):
-        upsert_partitioned(
-            base.limit(5), path, ["subj", "pred", "obj"], n_parts=32
-        )
-
-
 def test_cdc_incremental_batches_merge_exactly(spark, tmp_path):
     """Two source batches ingested incrementally (per-batch work dirs +
     one shared triple table via run_kg(upsert=True, triples_path=...)):
