@@ -151,7 +151,7 @@ def candidate_pairs(
 
 
 def score_edges(pairs: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataFrame:
-    """Candidate pairs -> similarity edges above threshold (EDGES schema).
+    """Candidate pairs -> similarity edges (src, dst, sim) >= threshold.
 
     Cheap Catalyst pre-filter before the Python scorer: a ratio >= t needs
     the length gap <= (1-t) * max(len) (Levenshtein >= |len(a)-len(b)|),
@@ -172,7 +172,7 @@ NUMERIC_TYPES = ("PRICE", "PHONE")
 
 def typed_link_surfaces(surfaces: DataFrame) -> DataFrame:
     """Typed blocking over distinct (mention_id, entity_type, norm_surface)
-    surface forms (the pipeline's linker) -> EDGES.
+    surface forms (the pipeline's linker) -> edges (src, dst, sim).
 
     PRICE/PHONE surfaces carry a canonical numeric value — two price
     surfaces corefer iff their comma-stripped amounts are equal ("2,500 ብር"

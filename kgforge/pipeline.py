@@ -274,7 +274,8 @@ def related_entities(
     canonical co-mention graph entity_salience uses, with teleport mass
     returning to the SEED entities — "what is most related to these
     entities in this KG", the query a KG consumer actually asks
-    (kgforge/graph.py::personalized_pagerank_scaled; driver-gated as q99).
+    (kgforge/graph.py::personalized_pagerank_scaled; its ranks equal the
+    bit-exact Python mirror in tests/test_graph.py).
 
     ``seeds`` are '<TYPE>:<surface>' strings. Each surface is normalized
     exactly like mention surfaces (lower + whitespace collapse) and

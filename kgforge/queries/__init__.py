@@ -24,8 +24,6 @@ query, in definition order):
 - ``vectors``    q29-q31/q43/q44 (cosine top-k, IVF, k-means)
 - ``pipeline_q`` q32-q40/q42/q49/q51/q66/q90-q96 (streaming, multimodal,
                  scorecards, the KG pipeline itself)
-- ``graph_temporal`` q84/q85/q87-q89 (SCD2 history, priority sampling,
-                 deletion-neighborhood linking, PageRank, triangles)
 - ``oracle_gate`` the Spark-vs-DuckDB comparison behind
                  tests/test_oracles.py and tools/check_oracles.py
 """
@@ -58,4 +56,3 @@ from kgforge.queries.pipeline_q import (  # noqa: F401
     doc_neardup_components,
     leakage_free_split,
 )
-from kgforge.queries import graph_temporal as _graph_temporal  # noqa: E402,F401

@@ -45,15 +45,6 @@ MENTIONS = StructType(
     ]
 )
 
-# Candidate / scored linking edges
-EDGES = StructType(
-    [
-        StructField("src", LongType(), False),
-        StructField("dst", LongType(), False),
-        StructField("sim", DoubleType(), False),
-    ]
-)
-
 # Per-partition lineage/metrics row (idempotent resume + metrics, north rule).
 # fingerprint = hex(bit_xor(xxhash64(row))) — order-insensitive, O(1) memory
 # per partition (a sorted-list sha256 would need a per-partition collect; XOR

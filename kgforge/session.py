@@ -40,9 +40,10 @@ def get_spark(
         # its size conditions are met instead of defaulting to sort-merge —
         # the engine's equi-joins build small-side hash maps comfortably
         # and skip both sort passes. Measured same-box A/B at sf1 (warm):
-        # q81 3.5 vs 3.9, q88 4.4 vs 5.2, q07 1.2 vs 1.4, cold q81 4.6 vs
-        # 11.1; q01/q69 within noise. Not a local-only tune: the planner
-        # still falls back to SMJ when a build side would not fit.
+        # q81 3.5 vs 3.9, q88 (PageRank, since deleted) 4.4 vs 5.2, q07 1.2
+        # vs 1.4, cold q81 4.6 vs 11.1; q01/q69 within noise. Not a
+        # local-only tune: the planner still falls back to SMJ when a build
+        # side would not fit.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -1,19 +1,15 @@
-"""Behavior tests for kgforge/graph.py engine capabilities (BFS hop
-distances, k-core peel) and the pipeline's PageRank entity salience.
+"""Behavior tests for kgforge/graph.py: the pipeline's PageRank entity
+salience (global) and related-entity ranking (personalized).
 
-Strategy mirrors test_graph_temporal: handmade graphs with eye-checkable
-goldens, plus exact cross-checks on seeded pseudo-random graphs — BFS
-against a DuckDB recursive CTE (the same oracle engine the registry gate
-uses), k-core against a brute-force Python peel."""
+Strategy: handmade graphs with eye-checkable goldens, plus exact
+cross-checks on seeded pseudo-random graphs against a bit-exact Python
+mirror of the integer recurrence."""
 
 from __future__ import annotations
 
 import hashlib
 
-import duckdb
-import pytest
-
-from kgforge.graph import bfs_hops, k_core, pagerank_scaled
+from kgforge.graph import pagerank_scaled
 
 
 def _pairs_df(spark, pairs):
@@ -40,144 +36,8 @@ def _random_pairs(n_nodes=40, n_edges=90):
 
 
 # ---------------------------------------------------------------------------
-# BFS
-# ---------------------------------------------------------------------------
-
-
-def test_bfs_path_graph_distances(spark):
-    """Path 0-1-2-3-4 from source 0: dist == node id."""
-    pairs = [(i, i + 1) for i in range(4)]
-    got = {
-        r.node: r.dist
-        for r in bfs_hops(_pairs_df(spark, pairs), _sources_df(spark, [0])).collect()
-    }
-    assert got == {0: 0, 1: 1, 2: 2, 3: 3, 4: 4}
-
-
-def test_bfs_multi_source_takes_min(spark):
-    """Sources at both ends of a path: dist is min over sources."""
-    pairs = [(i, i + 1) for i in range(4)]
-    got = {
-        r.node: r.dist
-        for r in bfs_hops(
-            _pairs_df(spark, pairs), _sources_df(spark, [0, 4])
-        ).collect()
-    }
-    assert got == {0: 0, 4: 0, 1: 1, 3: 1, 2: 2}
-
-
-def test_bfs_unreachable_absent_and_max_hops_truncates(spark):
-    """Disconnected component never appears; max_hops bounds the sweep."""
-    pairs = [(0, 1), (1, 2), (2, 3), (10, 11)]
-    df = bfs_hops(_pairs_df(spark, pairs), _sources_df(spark, [0]), max_hops=2)
-    got = {r.node: r.dist for r in df.collect()}
-    assert got == {0: 0, 1: 1, 2: 2}  # 3 cut by max_hops; 10/11 unreachable
-
-
-def test_bfs_matches_duckdb_recursive_cte(spark):
-    """Exact distances on a seeded pseudo-random graph vs a recursive-CTE
-    oracle (min-hop BFS), node-for-node."""
-    pairs = _random_pairs()
-    sources = [0, 1]
-    spark_got = {
-        r.node: r.dist
-        for r in bfs_hops(
-            _pairs_df(spark, pairs), _sources_df(spark, sources), max_hops=12
-        ).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        "CREATE TABLE pairs(p1 BIGINT, p2 BIGINT)"
-    )
-    con.executemany("INSERT INTO pairs VALUES (?, ?)", pairs)
-    oracle = dict(
-        con.execute(
-            """
-            WITH RECURSIVE edges AS (
-                SELECT p1 AS src, p2 AS dst FROM pairs
-                UNION ALL
-                SELECT p2, p1 FROM pairs
-            ), walk(node, dist) AS (
-                SELECT * FROM (VALUES (0::BIGINT, 0), (1::BIGINT, 0))
-                UNION
-                SELECT e.dst, w.dist + 1
-                FROM walk w JOIN edges e ON e.src = w.node
-                WHERE w.dist < 12
-            )
-            SELECT node, min(dist) FROM walk GROUP BY node
-            """
-        ).fetchall()
-    )
-    assert spark_got == oracle
-
-
-# ---------------------------------------------------------------------------
-# k-core
-# ---------------------------------------------------------------------------
-
-
-def test_k_core_triangle_with_pendant(spark):
-    """Triangle 0-1-2 plus pendant 2-3: the 2-core is exactly the
-    triangle, every core degree 2."""
-    pairs = [(0, 1), (0, 2), (1, 2), (2, 3)]
-    got = {r.node: r.d for r in k_core(_pairs_df(spark, pairs), 2).collect()}
-    assert got == {0: 2, 1: 2, 2: 2}
-
-
-def test_k_core_cascading_peel(spark):
-    """Chain into a triangle: peeling the chain end cascades node by node
-    (exercises multi-round convergence), leaving only the triangle."""
-    pairs = [(0, 1), (1, 2), (2, 3), (3, 4), (3, 5), (4, 5)]
-    got = {r.node: r.d for r in k_core(_pairs_df(spark, pairs), 2).collect()}
-    assert got == {3: 2, 4: 2, 5: 2}
-
-
-def test_k_core_empty_when_k_exceeds_graph(spark):
-    pairs = [(0, 1), (1, 2)]
-    assert k_core(_pairs_df(spark, pairs), 3).count() == 0
-
-
-def _brute_k_core(pairs, k):
-    import collections
-
-    adj = collections.defaultdict(set)
-    for a, b in pairs:
-        adj[a].add(b)
-        adj[b].add(a)
-    changed = True
-    while changed:
-        changed = False
-        for n in list(adj):
-            if len(adj[n]) < k:
-                for m in adj.pop(n):
-                    adj[m].discard(n)
-                changed = True
-    return {n: len(v) for n, v in adj.items() if v}
-
-
-@pytest.mark.parametrize("k", [2, 3, 4])
-def test_k_core_matches_brute_force(spark, k):
-    pairs = _random_pairs(n_nodes=30, n_edges=80)
-    got = {r.node: r.d for r in k_core(_pairs_df(spark, pairs), k).collect()}
-    assert got == _brute_k_core(pairs, k)
-
-
-def test_k_core_idempotent(spark):
-    """k-core of the k-core is itself (fixpoint property)."""
-    pairs = _random_pairs(n_nodes=25, n_edges=60)
-    core1 = {r.node: r.d for r in k_core(_pairs_df(spark, pairs), 3).collect()}
-    core_pairs = [
-        (a, b) for a, b in pairs if a in core1 and b in core1
-    ]
-    core2 = {
-        r.node: r.d for r in k_core(_pairs_df(spark, core_pairs), 3).collect()
-    }
-    assert core1 == core2
-
-
-# ---------------------------------------------------------------------------
 # PageRank (exact goldens: the Python mirror below, for both the global and
-# the personalized form; q88 gates the global form against DuckDB too)
+# the personalized form)
 # ---------------------------------------------------------------------------
 
 
@@ -188,18 +48,6 @@ def test_pagerank_star_center_dominates(spark):
     assert ranks[0] > max(ranks[i] for i in range(1, 6))
     leaf_ranks = {ranks[i] for i in range(1, 6)}
     assert len(leaf_ranks) == 1  # symmetry => identical integer ranks
-
-
-def test_graph_ops_plans_have_no_cartesian(spark):
-    """Every join in the iterative BFS / k-core lineage must be an
-    equi-join (the whole-plan lineage includes every round)."""
-    pairs = _pairs_df(spark, _random_pairs(n_nodes=20, n_edges=40))
-    for df in (
-        bfs_hops(pairs, _sources_df(spark, [0]), max_hops=3),
-        k_core(pairs, 2, max_rounds=5),
-    ):
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        assert "CartesianProduct" not in plan and "cartesian" not in plan, plan[:1200]
 
 
 def test_pagerank_rank_mass_conserved(spark):

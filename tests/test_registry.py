@@ -6,8 +6,8 @@ from kgforge.queries import REGISTRY
 
 
 def test_registry_counts_match_docs():
-    """ADVICE r3: COVERAGE.md/README/BENCH-BASELINE drifted to three
-    different query counts. The documented split lives HERE, once; update
-    this test and all three docs together when adding queries."""
+    """ADVICE r3: COVERAGE.md and the README drifted to different query
+    counts. The documented split lives HERE, once; update this test and
+    both docs together when the registry changes."""
     oracle = sum(1 for qd in REGISTRY.values() if qd.sql is not None)
-    assert (len(REGISTRY), oracle) == (96, 85), (len(REGISTRY), oracle)
+    assert (len(REGISTRY), oracle) == (88, 77), (len(REGISTRY), oracle)
