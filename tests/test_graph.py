@@ -63,6 +63,31 @@ def test_pagerank_rank_mass_conserved(spark):
     assert PR_SCALE - 1_000_000 <= total <= PR_SCALE
 
 
+def test_graph_ops_plans_have_no_cartesian(spark, monkeypatch):
+    """Every join in the iterative PageRank lineage, global and
+    personalized, must be an equi-join. The result is checkpointed, so the
+    relation handed to localCheckpoint is captured: its plan holds every
+    round."""
+    from kgforge.graph import personalized_pagerank_scaled
+
+    pairs = _pairs_df(spark, _random_pairs(n_nodes=20, n_edges=40))
+    checkpointed = []
+    real = type(pairs).localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        checkpointed.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(pairs), "localCheckpoint", capture)
+    pagerank_scaled(pairs)
+    personalized_pagerank_scaled(pairs, _sources_df(spark, [0]))
+    assert len(checkpointed) == 2
+    for df in checkpointed:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Join" in plan, plan[:1200]
+        assert "CartesianProduct" not in plan and "cartesian" not in plan, plan[:1200]
+
+
 def test_pagerank_empty_pair_list_has_no_rows(spark):
     """A KG with no co-mentions has an empty pair list: PageRank returns
     no rows instead of dividing by a zero node count."""
