@@ -3,8 +3,8 @@
 - ``entry(spark)``: flagship query (TPC-H-Q1-shaped pricing summary) on
   /root/testdata/sf0.001.
 - ``queries()``: one entry per implemented operator family from SURVEY.md §2
-  plus the training-data-pipeline ops (dedup / similarity / text analysis /
-  multimodal) — see the kgforge/queries/ package.
+  plus the training-data-pipeline ops (dedup / similarity / text
+  analysis) — see the kgforge/queries/ package.
 - ``oracle_sql()``: the DuckDB-equivalent ANSI SQL for every
   SQL-expressible query (rows-only entries: the iterative-CC KG pipeline
   and the batched NER extraction, which have no SQL equivalent).

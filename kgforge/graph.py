@@ -94,67 +94,61 @@ def personalized_pagerank_scaled(
 
     Scale shape: the edge list (_pagerank_edges, hash-partitioned on src)
     and the seed-marked degrees derived from it are persisted for the loop
-    and released once the result is checkpointed; both keep the edge
-    cache's partitioning. The sources, the rank relation and the
-    per-iteration sums join onto that layout as shuffled-hash builds (the
-    shuffle_hash hints; each build side holds at most one row per node),
-    so AQE plans no broadcast and no second exchange: an iteration's only
-    exchange is the partial-agg shuffle on dst. At a few hundred edges a
-    query costs its number of stages (each broadcast or shuffle stage is
-    its own AQE job), not its data, and this shape minimizes them. The
-    driver never touches rows.
+    and released on every exit, after the result is checkpointed or when a
+    job raises; both keep the edge cache's partitioning. The sources, the
+    rank relation and the per-iteration sums join onto that layout as
+    shuffled-hash builds (the shuffle_hash hints; each build side holds at
+    most one row per node), so AQE plans no broadcast and no second
+    exchange: an iteration's only exchange is the partial-agg shuffle on
+    dst. At a few hundred edges a query costs its number of stages (each
+    broadcast or shuffle stage is its own AQE job), not its data, and this
+    shape minimizes them. The driver never touches rows.
     """
     num, den = DAMPING
+    # analysed before the first persist: a bad sources schema leaks no cache
+    seeds = sources.select("node").distinct().withColumn("is_src", F.lit(1))
     edges = _pagerank_edges(pairs).persist()
     deg = (
         edges.groupBy("src")
         .agg(F.count("*").alias("d"))
         .withColumnRenamed("src", "node")
     )
-    marked = deg.join(
-        sources.select("node")
-        .distinct()
-        .withColumn("is_src", F.lit(1))
-        .hint("shuffle_hash"),
-        "node",
-        "left",
-    ).select(
+    marked = deg.join(seeds.hint("shuffle_hash"), "node", "left").select(
         "node", "d", F.coalesce(F.col("is_src"), F.lit(0)).alias("is_src")
     ).persist()
-    n_src = marked.filter(F.col("is_src") == 1).count()
-    if n_src == 0:
-        empty = marked.select(
-            "node", "d", F.lit(0).cast("long").alias("r"), "is_src"
-        ).limit(0).localCheckpoint(eager=True)
-        marked.unpersist()
-        edges.unpersist()
-        return empty
-    base = ((den - num) * PR_SCALE) // (den * n_src)
-    r = marked.select(
-        "node",
-        "d",
-        "is_src",
-        (F.col("is_src") * F.lit(PR_SCALE // n_src)).cast("long").alias("r"),
-    )
-    for _ in range(iters):
-        r = r.hint("shuffle_hash")
-        contrib = edges.join(r, edges["src"] == r["node"]).select(
-            F.col("dst").alias("cnode"), F.expr("r div d").alias("c")
-        )
-        s = contrib.groupBy("cnode").agg(F.sum("c").alias("s")).hint(
-            "shuffle_hash"
-        )
-        r = marked.join(s, marked["node"] == s["cnode"], "left").select(
+    try:
+        n_src = marked.filter(F.col("is_src") == 1).count()
+        if n_src == 0:
+            return marked.select(
+                "node", "d", F.lit(0).cast("long").alias("r"), "is_src"
+            ).limit(0).localCheckpoint(eager=True)
+        base = ((den - num) * PR_SCALE) // (den * n_src)
+        r = marked.select(
             "node",
             "d",
             "is_src",
-            (
-                F.col("is_src") * F.lit(base)
-                + F.expr(f"({num} * coalesce(s, 0)) div {den}")
-            ).cast("long").alias("r"),
+            (F.col("is_src") * F.lit(PR_SCALE // n_src))
+            .cast("long")
+            .alias("r"),
         )
-    # materialize, then free the caches
-    out = r.select("node", "d", "r", "is_src").localCheckpoint(eager=True)
-    marked.unpersist()
-    edges.unpersist()
-    return out
+        for _ in range(iters):
+            r = r.hint("shuffle_hash")
+            contrib = edges.join(r, edges["src"] == r["node"]).select(
+                F.col("dst").alias("cnode"), F.expr("r div d").alias("c")
+            )
+            s = contrib.groupBy("cnode").agg(F.sum("c").alias("s")).hint(
+                "shuffle_hash"
+            )
+            r = marked.join(s, marked["node"] == s["cnode"], "left").select(
+                "node",
+                "d",
+                "is_src",
+                (
+                    F.col("is_src") * F.lit(base)
+                    + F.expr(f"({num} * coalesce(s, 0)) div {den}")
+                ).cast("long").alias("r"),
+            )
+        return r.select("node", "d", "r", "is_src").localCheckpoint(eager=True)
+    finally:
+        marked.unpersist()
+        edges.unpersist()

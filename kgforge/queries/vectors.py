@@ -236,7 +236,3 @@ def q31_centroid_cosine(spark, sf_dir):
         ),
         F.count("*").alias("n"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Streaming, multimodal, and the KG pipeline itself

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
+
 from kgforge.graph import pagerank_scaled
 
 
@@ -212,3 +214,21 @@ def test_personalized_pagerank_no_graph_seeds_empty(spark):
         _pairs_df(spark, pairs), _sources_df(spark, [99])
     )
     assert out.count() == 0
+
+
+def test_personalized_pagerank_releases_caches_when_a_job_fails(spark):
+    """The edge and seed-degree caches are released on the failure path
+    too: a sources relation whose evaluation raises makes the call raise,
+    and the session's CacheManager is empty afterwards."""
+    from pyspark.errors import PySparkException
+    from pyspark.sql import functions as F
+
+    from kgforge.graph import personalized_pagerank_scaled
+
+    sources = spark.range(1).select(
+        F.raise_error(F.lit("bad sources")).cast("long").alias("node")
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    with pytest.raises(PySparkException, match="bad sources"):
+        personalized_pagerank_scaled(_pairs_df(spark, [(0, 1)]), sources)
+    assert cache.isEmpty()

@@ -108,39 +108,6 @@ def test_mega_repo_skew_is_balanced_by_partitioner(spark):
     assert mega >= 14
 
 
-_img_st = st.integers(min_value=8, max_value=33)
-
-
-@given(h=_img_st, w=_img_st, seed=st.integers(0, 2**31 - 1),
-       subsample=st.booleans(), restart=st.sampled_from([0, 2]))
-@settings(max_examples=25, deadline=None)
-def test_jpeg_roundtrip_property(h, w, seed, subsample, restart):
-    """JPEG roundtrip over random smooth-ish images of arbitrary (non-
-    MCU-aligned) dims: decode(encode(img)) stays within the flat-quant
-    error envelope and preserves shape. Noise amplitude is kept below the
-    quant step so the bound is tight and deterministic."""
-    import numpy as np
-
-    from kgforge.multimodal import decode_jpeg, encode_jpeg
-
-    rng = np.random.default_rng(seed)
-    yy, xx = np.mgrid[0:h, 0:w]
-    base = np.stack([(xx * 3) % 200, (yy * 5) % 200, (xx + yy) % 200],
-                    axis=-1).astype(np.int64)
-    img = np.clip(base + rng.integers(-3, 4, base.shape), 0, 255).astype(
-        np.uint8
-    )
-    out = decode_jpeg(
-        encode_jpeg(img, quant=8, subsample=subsample,
-                    restart_interval=restart)
-    )
-    assert out.shape == img.shape
-    err = np.abs(out.astype(int) - img.astype(int)).max()
-    # flat quant 8 bounds luma error ~ sum|q_uv|/2 per DCT coef; chroma
-    # subsampling adds the 2x2-average deviation of the noise
-    assert err <= (40 if subsample else 30), err
-
-
 @given(st.data())
 @settings(max_examples=10, deadline=None)
 def test_upsert_random_batches_equal_union(spark, tmp_path_factory, data):
