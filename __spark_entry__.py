@@ -4,7 +4,7 @@
   /root/testdata/sf0.001.
 - ``queries()``: one entry per implemented operator family from SURVEY.md §2
   plus the training-data-pipeline ops (dedup / similarity / text
-  analysis) — see the kgforge/queries/ package.
+  analysis / binary payloads) — see the kgforge/queries/ package.
 - ``oracle_sql()``: the DuckDB-equivalent ANSI SQL for every
   SQL-expressible query (rows-only entries: the iterative-CC KG pipeline
   and the batched NER extraction, which have no SQL equivalent).

@@ -1,33 +1,15 @@
-"""Multimodal columns: images/audio as binary with REAL stdlib codecs.
+"""Media as ``binary`` columns: the Spark-side plumbing of q33.
 
 The reference OCRs images with Tesseract in a sequential file loop
 (reference: src/preprocessing/data_cleaner.py:102-182). kgforge treats
-media as ``binary`` columns with typed metadata and runs decode /
-feature-extract / resize / frame-sample as Arrow-batched ``mapInPandas``.
-
-Round 2 (VERDICT r1 missing #4): the codec layer is no longer a stub —
-this container has no PIL/ffmpeg, but two real formats need only the
-stdlib, so they are decoded FOR REAL:
-
-- **PPM (P6)** binary images -> numpy (h, w, 3) uint8, with true
-  nearest-neighbor resize and per-channel statistics;
-- **PNG** (round 4, VERDICT r3 #3) via zlib: chunk walk + CRC check,
-  IDAT inflate, all five scanline filters, gray/RGB/palette/alpha;
-- **WAV (PCM16)** audio via the stdlib ``wave`` module -> int16 samples,
-  with true evenly-spaced frame sampling and RMS/peak features;
-- **JPEG (baseline SOF0)** — real marker parse, huffman entropy decode,
-  dequantize + IDCT, 4:4:4/4:2:2/4:2:0 sampling, restart intervals.
-
-``decode_real`` dispatches on magic bytes; unsupported containers (MP4,
-progressive JPEG...) raise ValueError naming the codec that would plug
-in — the dispatch, batch shape, schema, and partition parallelism are
-identical.
+media as ``binary`` columns with typed metadata extracted by Arrow-batched
+``mapInPandas``. The codec is a deterministic stub (``decode_stub``), so
+the q33 aggregate stays DuckDB-expressible; ``resize_nearest`` is the
+one image primitive left.
 """
 
 from __future__ import annotations
 
-import io
-import wave
 from collections.abc import Iterator
 
 import numpy as np
@@ -35,81 +17,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
-
-# ---------------------------------------------------------------------------
-# PPM (P6) — real encode/decode, stdlib-only
-# ---------------------------------------------------------------------------
-
-
-def encode_ppm(width: int, height: int, seed: int = 0) -> bytes:
-    """Deterministic synthetic P6 image: per-pixel gradient + seed."""
-    header = f"P6\n{width} {height}\n255\n".encode("ascii")
-    y, x = np.mgrid[0:height, 0:width]
-    r = (x * 7 + seed) % 256
-    g = (y * 13 + seed * 3) % 256
-    b = (x + y + seed * 5) % 256
-    img = np.stack([r, g, b], axis=-1).astype(np.uint8)
-    return header + img.tobytes()
-
-
-# Decode envelope (VERDICT r5 #5): the stdlib codecs here are DESIGNED for
-# thumbnail/fixture-scale media — the JPEG huffman reader is per-bit Python
-# and PNG Paeth is per-pixel. Inside the envelope they are fast enough for
-# the mapInPandas batch loop; a photo-scale input would not fail, it would
-# CRAWL, silently degrading one executor for minutes. The guard turns that
-# into the same named-skip ValueError every other unsupported input takes
-# (skip-on-error upstream), telling the operator which production codec
-# (libjpeg-turbo / libpng) plugs in at the decode_real seam for real
-# photo volumes.
-MAX_DECODE_PX = 64  # per side
-MAX_DECODE_BYTES = 64 * 1024
-
-
-def _guard_envelope(width: int, height: int, codec: str) -> None:
-    if width > MAX_DECODE_PX or height > MAX_DECODE_PX:
-        raise ValueError(
-            f"{codec} {width}x{height} exceeds the {MAX_DECODE_PX}px pure-"
-            f"Python decode envelope: route photo-scale media through "
-            f"libjpeg-turbo/libpng at the decode_real seam"
-        )
-
-
-def decode_ppm(blob: bytes) -> np.ndarray:
-    """P6 -> (h, w, 3) uint8. Real parser: magic, whitespace/comment-
-    tolerant header, maxval 255, raw pixel payload."""
-    if not blob.startswith(b"P6"):
-        raise ValueError("not a P6 PPM")
-    # tokenize header: magic, width, height, maxval (comments start '#')
-    tokens: list[bytes] = []
-    i = 2
-    while len(tokens) < 3:
-        while i < len(blob) and blob[i : i + 1].isspace():
-            i += 1
-        if blob[i : i + 1] == b"#":
-            while i < len(blob) and blob[i : i + 1] != b"\n":
-                i += 1
-            continue
-        j = i
-        while j < len(blob) and not blob[j : j + 1].isspace():
-            j += 1
-        tokens.append(blob[i:j])
-        i = j
-    i += 1  # single whitespace after maxval
-    width, height, maxval = (int(t) for t in tokens)
-    if maxval != 255:
-        raise ValueError(f"unsupported maxval {maxval}")
-    _guard_envelope(width, height, "PPM")
-    n = width * height * 3
-    pix = np.frombuffer(blob, dtype=np.uint8, count=n, offset=i)
-    return pix.reshape(height, width, 3)
 
 
 def resize_nearest(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
@@ -118,821 +30,6 @@ def resize_nearest(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     ys = (np.arange(out_h) * h // out_h).clip(0, h - 1)
     xs = (np.arange(out_w) * w // out_w).clip(0, w - 1)
     return img[ys][:, xs]
-
-
-# ---------------------------------------------------------------------------
-# PNG — real encode/decode, stdlib-only (zlib + CRC32), VERDICT r3 #3
-# ---------------------------------------------------------------------------
-# The reference's image pipeline OCRs real photo formats
-# (data_cleaner.py:102-141); PNG is the one photo container fully
-# decodable without a codec library: chunk parse -> zlib-inflate IDAT ->
-# per-scanline unfilter (None/Sub/Up/Average/Paeth) -> RGB. JPEG has its
-# own baseline codec further down (r5); progressive variants still raise.
-
-
-def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    import struct
-    import zlib
-
-    return (
-        struct.pack(">I", len(data))
-        + ctype
-        + data
-        + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-    )
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
-def encode_png(img: np.ndarray, filter_type: int = 0) -> bytes:
-    """(h, w, 3) uint8 -> real PNG bytes (8-bit truecolor, no interlace).
-
-    ``filter_type`` applies that scanline filter to EVERY row (0-4), so
-    tests can exercise each unfilter branch; any conformant reader
-    (including ``decode_png``) must invert it exactly.
-    """
-    import struct
-    import zlib
-
-    h, w = img.shape[:2]
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    bpp = 3
-    raw = bytearray()
-    prev = np.zeros(w * bpp, dtype=np.int32)
-    for y in range(h):
-        row = img[y].reshape(-1).astype(np.int32)
-        raw.append(filter_type)
-        if filter_type == 0:
-            filt = row
-        elif filter_type == 1:  # Sub
-            left = np.concatenate([np.zeros(bpp, np.int32), row[:-bpp]])
-            filt = row - left
-        elif filter_type == 2:  # Up
-            filt = row - prev
-        elif filter_type == 3:  # Average
-            left = np.concatenate([np.zeros(bpp, np.int32), row[:-bpp]])
-            filt = row - (left + prev) // 2
-        elif filter_type == 4:  # Paeth
-            left = np.concatenate([np.zeros(bpp, np.int32), row[:-bpp]])
-            upleft = np.concatenate([np.zeros(bpp, np.int32), prev[:-bpp]])
-            filt = row - np.array(
-                [_paeth(int(a), int(b), int(c)) for a, b, c in zip(left, prev, upleft)],
-                dtype=np.int32,
-            )
-        else:
-            raise ValueError(f"bad filter {filter_type}")
-        raw.extend((filt % 256).astype(np.uint8).tobytes())
-        prev = row
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def decode_png(blob: bytes) -> np.ndarray:
-    """PNG -> (h, w, 3) uint8. Real decoder: chunk walk, IHDR validation,
-    multi-IDAT zlib inflate, all five scanline filters, gray/RGB/palette/
-    alpha color types (alpha dropped, gray replicated, palette looked up).
-    8-bit depth, non-interlaced (interlace needs Adam7 — rejected loudly).
-
-    Performance envelope (ADVICE r4): filters 0/2 are fully numpy-
-    vectorized; Sub (1) is a per-channel cumsum mod 256 (vectorized);
-    Average (3) and Paeth (4) carry a true sequential left-dependency
-    through a nonlinear predictor, so they run a per-byte Python loop —
-    O(h*w) interpreter time. Fine for thumbnail/test-sized images (the
-    bench corpus is 10-32 px); photo-sized PNGs that are Average/Paeth-
-    heavy will be slow — route those through a real codec (libjpeg-turbo
-    / libpng) at the same ``decode_real`` dispatch seam in production."""
-    import struct
-    import zlib
-
-    if blob[:8] != b"\x89PNG\r\n\x1a\n":
-        raise ValueError("not a PNG")
-    pos = 8
-    ihdr = None
-    idat = bytearray()
-    plte = None
-    while pos + 8 <= len(blob):
-        (length,) = struct.unpack(">I", blob[pos : pos + 4])
-        ctype = blob[pos + 4 : pos + 8]
-        data = blob[pos + 8 : pos + 8 + length]
-        if zlib.crc32(ctype + data) & 0xFFFFFFFF != struct.unpack(
-            ">I", blob[pos + 8 + length : pos + 12 + length]
-        )[0]:
-            raise ValueError(f"PNG chunk {ctype!r} CRC mismatch")
-        pos += 12 + length
-        if ctype == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", data)
-        elif ctype == b"PLTE":
-            plte = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3)
-        elif ctype == b"IDAT":
-            idat.extend(data)
-        elif ctype == b"IEND":
-            break
-    if ihdr is None:
-        raise ValueError("PNG missing IHDR")
-    w, h, depth, color, comp, filt_m, interlace = ihdr
-    if depth != 8 or comp != 0 or filt_m != 0:
-        raise ValueError(f"unsupported PNG depth/compression ({depth},{comp})")
-    if interlace != 0:
-        raise ValueError("interlaced PNG (Adam7) not supported")
-    # before the zlib.decompress + per-row filter pass, not after
-    _guard_envelope(w, h, "PNG")
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color)
-    if channels is None:
-        raise ValueError(f"unsupported PNG color type {color}")
-    raw = zlib.decompress(bytes(idat))
-    stride = w * channels
-    if len(raw) != h * (stride + 1):
-        raise ValueError("PNG pixel payload length mismatch")
-    out = np.zeros((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.int32)
-    bpp = channels
-    for y in range(h):
-        line = raw[y * (stride + 1) : (y + 1) * (stride + 1)]
-        ftype, row = line[0], np.frombuffer(line[1:], np.uint8).astype(np.int32)
-        if ftype == 0:
-            cur = row
-        elif ftype == 2:  # Up — no left dependency, fully vectorized
-            cur = (row + prev) % 256
-        elif ftype == 1:  # Sub: recon[i] = row[i] + recon[i-bpp] — exactly
-            # a per-channel cumulative sum mod 256, vectorized (ADVICE r4)
-            cur = (
-                np.cumsum(row.reshape(-1, bpp).astype(np.int64), axis=0) % 256
-            ).reshape(-1).astype(np.int32)
-        elif ftype in (3, 4):  # nonlinear left-dependency: sequential
-            cur = np.zeros(stride, dtype=np.int32)
-            for i in range(stride):
-                a = cur[i - bpp] if i >= bpp else 0
-                b = int(prev[i])
-                c = int(prev[i - bpp]) if i >= bpp else 0
-                pred = (a + b) // 2 if ftype == 3 else _paeth(a, b, c)
-                cur[i] = (row[i] + pred) % 256
-        else:
-            raise ValueError(f"bad PNG filter byte {ftype}")
-        out[y] = cur.astype(np.uint8)
-        prev = cur
-    px = out.reshape(h, w, channels)
-    if color == 3:
-        if plte is None:
-            raise ValueError("palette PNG missing PLTE")
-        return plte[px[:, :, 0]]
-    if color in (0, 4):  # gray / gray+alpha -> replicate luma
-        return np.repeat(px[:, :, :1], 3, axis=2)
-    return px[:, :, :3]  # RGB / RGBA (alpha dropped)
-
-
-# ---------------------------------------------------------------------------
-# WAV (PCM16) — real encode/decode via stdlib wave
-# ---------------------------------------------------------------------------
-
-
-def encode_wav(n_samples: int, rate: int = 16000, seed: int = 0) -> bytes:
-    """Deterministic synthetic PCM16 mono WAV (integer sawtooth — exact)."""
-    t = np.arange(n_samples, dtype=np.int64)
-    samples = (((t * (37 + seed)) % 20001) - 10000).astype(np.int16)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(samples.tobytes())
-    return buf.getvalue()
-
-
-def decode_wav(blob: bytes) -> tuple[np.ndarray, int]:
-    """WAV -> (int16 samples, sample_rate)."""
-    with wave.open(io.BytesIO(blob), "rb") as w:
-        rate = w.getframerate()
-        frames = w.readframes(w.getnframes())
-    return np.frombuffer(frames, dtype=np.int16), rate
-
-
-def frame_sample(samples: np.ndarray, n: int) -> np.ndarray:
-    """n evenly-spaced frames (the video frame-sampling shape, applied to
-    audio samples here)."""
-    if len(samples) == 0 or n <= 0:
-        return samples[:0]
-    idx = (np.arange(n) * len(samples) // n).clip(0, len(samples) - 1)
-    return samples[idx]
-
-
-# ---------------------------------------------------------------------------
-# JPEG — baseline (SOF0) encode/decode, stdlib+numpy (VERDICT r4 #3)
-# ---------------------------------------------------------------------------
-# The last real-format gap vs the reference's photo OCR pipeline
-# (data_cleaner.py:102-141; its media corpus is JPEG-dominated). Baseline
-# sequential DCT only: SOI/APPn/DQT/SOF0/DHT/DRI/SOS/RSTn/EOI markers,
-# huffman entropy decode with byte unstuffing, dequantize -> de-zigzag ->
-# float IDCT -> level shift, sampling factors 1-2 per axis (covers 4:4:4,
-# 4:2:2, 4:2:0), grayscale and YCbCr. Progressive (SOF2) and arithmetic
-# coding are rejected loudly by marker name. The encoder exists for test
-# fixtures: it emits canonical single-length huffman tables built from the
-# actual symbol set (any conformant decoder accepts them — simpler and
-# less error-prone than transcribing the Annex K defaults) and optional
-# 2x2-subsampled chroma, so the decoder's 4:2:0 path has real coverage.
-# Like the PNG path: per-block Python loops — fine for thumbnails/tests,
-# route photo-scale volumes through libjpeg-turbo at the decode_real seam.
-
-_ZIGZAG: list[tuple[int, int]] = [
-    rc
-    for s in range(15)
-    for rc in (
-        lambda d, even: d[::-1] if even else d
-    )(
-        [(r, s - r) for r in range(max(0, s - 7), min(8, s + 1))], s % 2 == 0
-    )
-]
-
-
-def _dct_mat() -> np.ndarray:
-    import math
-
-    m = np.zeros((8, 8))
-    for u in range(8):
-        cu = math.sqrt(0.5) if u == 0 else 1.0
-        for x in range(8):
-            m[u, x] = 0.5 * cu * math.cos((2 * x + 1) * u * math.pi / 16)
-    return m
-
-
-_DCT = _dct_mat()
-
-
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, length: int) -> None:
-        for i in range(length - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((value >> i) & 1)
-            self.nbits += 1
-            if self.nbits == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)  # byte stuffing
-                self.acc = 0
-                self.nbits = 0
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            self.write((1 << (8 - self.nbits)) - 1, 8 - self.nbits)
-        return bytes(self.out)
-
-
-def _mag_bits(v: int) -> tuple[int, int]:
-    """JPEG magnitude coding: (size category, appended bits)."""
-    if v == 0:
-        return 0, 0
-    a = abs(v)
-    size = a.bit_length()
-    return size, (v if v > 0 else v + (1 << size) - 1)
-
-
-def _rgb_to_ycbcr(img: np.ndarray) -> np.ndarray:
-    r, g, b = (img[..., i].astype(np.float64) for i in range(3))
-    return np.stack(
-        [
-            0.299 * r + 0.587 * g + 0.114 * b,
-            128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b,
-            128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b,
-        ],
-        axis=-1,
-    )
-
-
-def _ycbcr_to_rgb(y, cb, cr) -> np.ndarray:
-    cb = cb - 128.0
-    cr = cr - 128.0
-    return np.stack(
-        [y + 1.402 * cr, y - 0.344136 * cb - 0.714136 * cr, y + 1.772 * cb],
-        axis=-1,
-    ).clip(0, 255).round().astype(np.uint8)
-
-
-def _blocks_of(plane: np.ndarray) -> list[np.ndarray]:
-    """8x8 blocks in raster order; plane dims are multiples of 8."""
-    h, w = plane.shape
-    return [
-        plane[by : by + 8, bx : bx + 8]
-        for by in range(0, h, 8)
-        for bx in range(0, w, 8)
-    ]
-
-
-def _quantize_block(block: np.ndarray, q: np.ndarray) -> list[int]:
-    coef = _DCT @ (block.astype(np.float64) - 128.0) @ _DCT.T
-    qc = np.round(coef / q).astype(np.int64)
-    return [int(qc[r, c]) for r, c in _ZIGZAG]
-
-
-def _block_symbols(zz: list[int], dc_pred: int) -> tuple[list, int]:
-    """[(dc_or_ac, symbol, extra_value, extra_size), ...] for one block."""
-    syms = []
-    size, bits = _mag_bits(zz[0] - dc_pred)
-    syms.append(("dc", size, bits, size))
-    run = 0
-    last_nz = max((i for i in range(1, 64) if zz[i]), default=0)
-    for i in range(1, last_nz + 1):
-        if zz[i] == 0:
-            run += 1
-            continue
-        while run > 15:
-            syms.append(("ac", 0xF0, 0, 0))  # ZRL
-            run -= 16
-        size, bits = _mag_bits(zz[i])
-        syms.append(("ac", (run << 4) | size, bits, size))
-        run = 0
-    if last_nz < 63:
-        syms.append(("ac", 0x00, 0, 0))  # EOB
-    return syms, zz[0]
-
-
-def _canonical_table(symbols: list[int]) -> tuple[list[int], list[int], dict]:
-    """All-same-length canonical huffman code over the symbol set: n codes
-    of length L (2^L > n keeps the all-ones code unused, as JPEG requires).
-    Returns (bits[1..16], ordered symbols, {symbol: (code, L)})."""
-    ordered = sorted(set(symbols))
-    n = len(ordered)
-    length = max(1, n.bit_length()) if n else 1
-    while (1 << length) <= n:
-        length += 1
-    bits = [0] * 17
-    bits[length] = n
-    return bits, ordered, {s: (i, length) for i, s in enumerate(ordered)}
-
-
-def encode_jpeg(
-    img: np.ndarray, quant: int = 8, subsample: bool = False,
-    restart_interval: int = 0,
-) -> bytes:
-    """(h, w) gray or (h, w, 3) RGB uint8 -> baseline JFIF bytes.
-
-    ``quant``: uniform quantization step (flat table — keeps the roundtrip
-    error bound simple: test-friendly, still real lossy compression).
-    ``subsample=True`` emits 4:2:0 (2x2-mean chroma, 16x16 MCUs) so the
-    decoder's multi-block-MCU upsampling path is exercised.
-    ``restart_interval=R`` emits DRI + an RSTn marker every R MCUs (DC
-    predictors reset, bitstream byte-aligned) — the decoder's restart
-    path, which real camera JPEGs use for error resilience."""
-    import struct
-
-    gray = img.ndim == 2
-    h, w = img.shape[:2]
-    q = np.full((8, 8), float(quant))
-    if gray:
-        planes = [img.astype(np.float64)]
-        samp = [(1, 1)]
-    elif subsample:
-        ycc = _rgb_to_ycbcr(img)
-        # pad to 16 so chroma halving stays block-aligned
-        ph, pw = -(-h // 16) * 16, -(-w // 16) * 16
-        ycc = np.pad(ycc, ((0, ph - h), (0, pw - w), (0, 0)), mode="edge")
-        cb = ycc[:, :, 1].reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-        cr = ycc[:, :, 2].reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-        planes = [ycc[:, :, 0], cb, cr]
-        samp = [(2, 2), (1, 1), (1, 1)]
-    else:
-        ycc = _rgb_to_ycbcr(img)
-        planes = [ycc[:, :, 0], ycc[:, :, 1], ycc[:, :, 2]]
-        samp = [(1, 1), (1, 1), (1, 1)]
-
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-    mcus_x, mcus_y = -(-w // mcu_w), -(-h // mcu_h)
-
-    padded = []
-    for p, (sh, sv) in zip(planes, samp):
-        tw, th = mcus_x * 8 * sh, mcus_y * 8 * sv
-        padded.append(
-            np.pad(
-                p[: th, : tw],
-                ((0, max(0, th - p.shape[0])), (0, max(0, tw - p.shape[1]))),
-                mode="edge",
-            )
-        )
-
-    # MCU-ordered quantized blocks, interleaved per SOF component order
-    mcu_blocks: list[list[list[int]]] = []  # [mcu][comp-block] -> zigzag
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            blocks = []
-            for p, (sh, sv) in zip(padded, samp):
-                for by in range(sv):
-                    for bx in range(sh):
-                        y0 = (my * sv + by) * 8
-                        x0 = (mx * sh + bx) * 8
-                        blocks.append(
-                            _quantize_block(p[y0 : y0 + 8, x0 : x0 + 8], q)
-                        )
-            mcu_blocks.append(blocks)
-
-    # pass 1: symbol statistics -> canonical tables
-    comp_of_block = []
-    for ci, (sh, sv) in enumerate(samp):
-        comp_of_block.extend([ci] * (sh * sv))
-    dc_syms: list[int] = []
-    ac_syms: list[int] = []
-    preds = [0] * len(planes)
-    all_syms: list[list] = []
-    for mi, blocks in enumerate(mcu_blocks):
-        if restart_interval and mi and mi % restart_interval == 0:
-            preds = [0] * len(planes)  # DC prediction resets at restarts
-        row = []
-        for bi, zz in enumerate(blocks):
-            ci = comp_of_block[bi]
-            syms, preds[ci] = _block_symbols(zz, preds[ci])
-            row.append(syms)
-            dc_syms.extend(s[1] for s in syms if s[0] == "dc")
-            ac_syms.extend(s[1] for s in syms if s[0] == "ac")
-        all_syms.append(row)
-    dc_bits, dc_vals, dc_code = _canonical_table(dc_syms)
-    ac_bits, ac_vals, ac_code = _canonical_table(ac_syms)
-
-    # pass 2: entropy-coded data (one byte-aligned segment per restart
-    # interval, RSTn markers cycling D0-D7 between them)
-    chunks: list[bytes] = []
-    bw = _BitWriter()
-    for mi, row in enumerate(all_syms):
-        if restart_interval and mi and mi % restart_interval == 0:
-            chunks.append(bw.flush())
-            chunks.append(bytes([0xFF, 0xD0 + ((mi // restart_interval) - 1) % 8]))
-            bw = _BitWriter()
-        for syms in row:
-            for kind, sym, bits, size in syms:
-                code, length = (dc_code if kind == "dc" else ac_code)[sym]
-                bw.write(code, length)
-                if size:
-                    bw.write(bits, size)
-    chunks.append(bw.flush())
-    data = b"".join(chunks)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
-    zz_q = bytes(int(q[r, c]) for r, c in _ZIGZAG)
-    sof_comps = b"".join(
-        struct.pack("BBB", ci + 1, (sh << 4) | sv, 0)
-        for ci, (sh, sv) in enumerate(samp)
-    )
-    sos_comps = b"".join(
-        struct.pack("BB", ci + 1, 0x00) for ci in range(len(planes))
-    )
-    return (
-        b"\xff\xd8"  # SOI
-        + seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-        + seg(0xFFDB, b"\x00" + zz_q)  # DQT table 0, 8-bit
-        + seg(
-            0xFFC0,
-            struct.pack(">BHHB", 8, h, w, len(planes)) + sof_comps,
-        )  # SOF0
-        + seg(0xFFC4, bytes([0x00]) + bytes(dc_bits[1:]) + bytes(dc_vals))
-        + seg(0xFFC4, bytes([0x10]) + bytes(ac_bits[1:]) + bytes(ac_vals))
-        + (seg(0xFFDD, struct.pack(">H", restart_interval))
-           if restart_interval else b"")
-        + seg(0xFFDA, bytes([len(planes)]) + sos_comps + b"\x00\x3f\x00")
-        + data
-        + b"\xff\xd9"  # EOI
-    )
-
-
-class _BitReader:
-    """Entropy-segment bit reader: unstuffs 0xFF00, stops at any marker;
-    RSTn markers are consumed by ``restart()``."""
-
-    def __init__(self, buf: bytes, pos: int):
-        self.buf = buf
-        self.pos = pos
-        self.acc = 0
-        self.nbits = 0
-
-    def _fill(self) -> None:
-        b = self.buf[self.pos]
-        if b == 0xFF:
-            nxt = self.buf[self.pos + 1]
-            if nxt == 0x00:
-                self.pos += 2
-            elif 0xD0 <= nxt <= 0xD7:
-                raise ValueError("JPEG entropy data ran into a restart marker")
-            else:
-                raise ValueError("JPEG entropy data truncated at marker")
-        else:
-            self.pos += 1
-        # mask consumed high bits BEFORE shifting: without this, acc grows
-        # by 8 bits per byte ever read, making decode O(n^2) bigint work
-        # on photo-sized entropy segments (code-review r5)
-        self.acc = (((self.acc & ((1 << self.nbits) - 1)) << 8) | b)
-        self.nbits += 8
-
-    def bit(self) -> int:
-        if self.nbits == 0:
-            self._fill()
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
-
-    def restart(self) -> None:
-        """Byte-align and consume one RSTn marker."""
-        self.acc = 0
-        self.nbits = 0
-        if not (
-            self.buf[self.pos] == 0xFF
-            and 0xD0 <= self.buf[self.pos + 1] <= 0xD7
-        ):
-            raise ValueError("JPEG restart marker expected")
-        self.pos += 2
-
-
-def _huff_decoder(bits: list[int], vals: bytes) -> dict[tuple[int, int], int]:
-    """DHT (bits[1..16], values) -> {(length, code): symbol} canonical map."""
-    table = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length]):
-            table[(length, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
-def _read_huff(br: _BitReader, table: dict) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | br.bit()
-        if (length, code) in table:
-            return table[(length, code)]
-    raise ValueError("JPEG huffman code not in table")
-
-
-def _extend(v: int, size: int) -> int:
-    return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-
-
-def decode_jpeg(blob: bytes) -> np.ndarray:
-    """Baseline JPEG -> (h, w, 3) uint8 (grayscale replicated to RGB).
-
-    Sequential DCT (SOF0) only; progressive/extended/arithmetic variants
-    raise with the marker name. Sampling factors 1-2 per axis; restart
-    intervals honored (DC predictors reset, reader re-aligned)."""
-    import struct
-
-    if blob[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
-    qt: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict] = {}  # (class, id) -> decode map
-    sof = None
-    restart_interval = 0
-    while pos + 4 <= len(blob):
-        if blob[pos] != 0xFF:
-            raise ValueError("JPEG marker expected")
-        marker = blob[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        (ln,) = struct.unpack(">H", blob[pos + 2 : pos + 4])
-        payload = blob[pos + 4 : pos + 2 + ln]
-        pos += 2 + ln
-        if marker == 0xDB:  # DQT (possibly several tables)
-            p = 0
-            while p < len(payload):
-                pq, tq = payload[p] >> 4, payload[p] & 0x0F
-                p += 1
-                if pq != 0:
-                    raise ValueError("16-bit DQT not supported (baseline)")
-                tab = np.zeros((8, 8))
-                for i, (r, c) in enumerate(_ZIGZAG):
-                    tab[r, c] = payload[p + i]
-                qt[tq] = tab
-                p += 64
-        elif marker == 0xC4:  # DHT (possibly several tables)
-            p = 0
-            while p < len(payload):
-                tc, th = payload[p] >> 4, payload[p] & 0x0F
-                bits = [0] + list(payload[p + 1 : p + 17])
-                n = sum(bits)
-                vals = payload[p + 17 : p + 17 + n]
-                huff[(tc, th)] = _huff_decoder(bits, vals)
-                p += 17 + n
-        elif marker == 0xC0 or marker == 0xC1:  # SOF0/1 (baseline/extended-seq huffman)
-            prec, ih, iw, nc = struct.unpack(">BHHB", payload[:6])
-            if prec != 8:
-                raise ValueError("only 8-bit JPEG precision supported")
-            # before any entropy decode (the per-bit huffman path)
-            _guard_envelope(iw, ih, "JPEG")
-            comps = []
-            for i in range(nc):
-                cid, hv, tq = payload[6 + 3 * i : 9 + 3 * i]
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "tq": tq})
-            sof = (ih, iw, comps)
-        elif marker in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                        0xCD, 0xCE, 0xCF):
-            raise ValueError(
-                f"non-baseline JPEG (SOF marker 0xFF{marker:02X}: "
-                "progressive/arithmetic need libjpeg)"
-            )
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack(">H", payload[:2])
-        elif marker == 0xDA:  # SOS — entropy data follows
-            if sof is None:
-                raise ValueError("JPEG SOS before SOF")
-            ns = payload[0]
-            scan_tables = {}
-            for i in range(ns):
-                cs, tdta = payload[1 + 2 * i : 3 + 2 * i]
-                scan_tables[cs] = (tdta >> 4, tdta & 0x0F)
-            return _decode_scan(
-                blob, pos, sof, qt, huff, scan_tables, restart_interval
-            )
-        # APPn / COM / others: skipped
-    raise ValueError("JPEG has no SOS scan")
-
-
-def _decode_scan(blob, pos, sof, qt, huff, scan_tables, restart_interval):
-    ih, iw, comps = sof
-    for c in comps:
-        if not (1 <= c["h"] <= 2 and 1 <= c["v"] <= 2):
-            raise ValueError("JPEG sampling factors beyond 2 not supported")
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcus_x = -(-iw // (8 * hmax))
-    mcus_y = -(-ih // (8 * vmax))
-    planes = [
-        np.zeros((mcus_y * 8 * c["v"], mcus_x * 8 * c["h"])) for c in comps
-    ]
-    br = _BitReader(blob, pos)
-    preds = [0] * len(comps)
-    idct = _DCT.T
-    for mcu in range(mcus_x * mcus_y):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            br.restart()
-            preds = [0] * len(comps)
-        my, mx = divmod(mcu, mcus_x)
-        for ci, c in enumerate(comps):
-            if c["id"] not in scan_tables:
-                raise ValueError(f"JPEG SOS missing component id {c['id']}")
-            dc_tab = huff.get((0, scan_tables[c["id"]][0]))
-            ac_tab = huff.get((1, scan_tables[c["id"]][1]))
-            q = qt.get(c["tq"])
-            if q is None:
-                raise ValueError(f"JPEG scan references missing DQT {c['tq']}")
-            if dc_tab is None or ac_tab is None:
-                raise ValueError("JPEG scan references missing huffman table")
-            for by in range(c["v"]):
-                for bx in range(c["h"]):
-                    size = _read_huff(br, dc_tab)
-                    diff = _extend(br.bits(size), size) if size else 0
-                    preds[ci] += diff
-                    zz = np.zeros(64)
-                    zz[0] = preds[ci]
-                    k = 1
-                    while k < 64:
-                        rs = _read_huff(br, ac_tab)
-                        if rs == 0x00:  # EOB
-                            break
-                        if rs == 0xF0:  # ZRL
-                            k += 16
-                            continue
-                        k += rs >> 4
-                        size = rs & 0x0F
-                        if k > 63:
-                            raise ValueError("JPEG AC index overflow")
-                        zz[k] = _extend(br.bits(size), size)
-                        k += 1
-                    coef = np.zeros((8, 8))
-                    for i, (r, cc) in enumerate(_ZIGZAG):
-                        coef[r, cc] = zz[i]
-                    block = idct @ (coef * q) @ _DCT + 128.0
-                    y0 = (my * c["v"] + by) * 8
-                    x0 = (mx * c["h"] + bx) * 8
-                    planes[ci][y0 : y0 + 8, x0 : x0 + 8] = block
-    full = []
-    for p, c in zip(planes, comps):
-        up = np.repeat(
-            np.repeat(p, vmax // c["v"], axis=0), hmax // c["h"], axis=1
-        )
-        full.append(up[:ih, :iw])
-    if len(full) == 1:
-        g = full[0].clip(0, 255).round().astype(np.uint8)
-        return np.stack([g, g, g], axis=-1)
-    if len(full) != 3:
-        raise ValueError(f"JPEG with {len(full)} components not supported")
-    return _ycbcr_to_rgb(full[0], full[1], full[2])
-
-
-# ---------------------------------------------------------------------------
-# Dispatch + Spark-side feature extraction
-# ---------------------------------------------------------------------------
-
-
-def decode_real(blob: bytes) -> dict:
-    """Magic-byte dispatch to a REAL decoder; unsupported containers name
-    the codec that would plug in (same dispatch shape)."""
-    is_image = (
-        blob.startswith(b"P6")
-        or blob[:8] == b"\x89PNG\r\n\x1a\n"
-        or blob[:3] == b"\xff\xd8\xff"
-    )
-    # byte-size envelope BEFORE any parsing: a photo-scale blob must skip
-    # with a named reason, never reach the per-bit/per-pixel Python paths
-    # (the dimension guards inside each decoder cover small-but-wide
-    # headers; this covers everything else, e.g. a giant IDAT)
-    if is_image and len(blob) > MAX_DECODE_BYTES:
-        raise ValueError(
-            f"image blob {len(blob)} bytes exceeds the {MAX_DECODE_BYTES}-"
-            f"byte pure-Python decode envelope: route photo-scale media "
-            f"through libjpeg-turbo/libpng at the decode_real seam"
-        )
-    if blob.startswith(b"P6") or blob[:8] == b"\x89PNG\r\n\x1a\n":
-        is_png = blob[:1] == b"\x89"
-        if is_png:
-            import struct
-            import zlib
-
-            # skip-on-error contract: the upstream loop catches ValueError
-            # only, but a truncated chunk raises struct.error, a corrupt
-            # IDAT zlib.error, and an out-of-range palette index
-            # IndexError (code-review r4) — normalize them all
-            try:
-                img = decode_png(blob)
-            except (struct.error, zlib.error, IndexError) as e:
-                raise ValueError(f"malformed PNG: {e}") from e
-        else:
-            img = decode_ppm(blob)
-        small = resize_nearest(img, 8, 8)
-        return {
-            "kind": "image/png" if is_png else "image/ppm",
-            "width": int(img.shape[1]),
-            "height": int(img.shape[0]),
-            "n_frames": 1,
-            "features": [round(float(x), 4) for x in (
-                img.mean(axis=(0, 1)).tolist() + small.astype(np.float64).std(axis=(0, 1)).tolist()
-            )],
-        }
-    if blob.startswith(b"RIFF"):
-        # RIFF is a family of containers: only WAVE is decodable here.
-        # AVI/WebP (also RIFF) and truncated WAVs raise wave.Error/EOFError
-        # from the stdlib, which the skip-on-error loop upstream only
-        # catches as ValueError — re-raise accordingly so one malformed
-        # blob skips instead of failing the whole task (ADVICE r2).
-        if blob[8:12] != b"WAVE":
-            raise ValueError("RIFF container is not WAVE (AVI/WebP need a plug-in codec)")
-        import wave as _wave
-
-        try:
-            samples, rate = decode_wav(blob)
-        except (_wave.Error, EOFError) as e:
-            raise ValueError(f"malformed WAV: {e}") from e
-        picked = frame_sample(samples, 16)
-        rms = float(np.sqrt(np.mean(samples.astype(np.float64) ** 2))) if len(samples) else 0.0
-        return {
-            "kind": "audio/wav",
-            "width": rate,
-            "height": 0,
-            "n_frames": int(len(samples)),
-            "features": [round(rms, 4)] + [float(x) for x in picked[:4]],
-        }
-    if blob[:3] == b"\xff\xd8\xff":
-        import struct
-
-        # same skip-on-error normalization as PNG: truncated segments raise
-        # struct.error / IndexError, and a scan referencing an undefined
-        # quant/huffman table id or unknown SOS component id raises
-        # KeyError (code-review r5) — one bad blob must skip, not kill the
-        # task
-        try:
-            img = decode_jpeg(blob)
-        except (struct.error, IndexError, KeyError) as e:
-            raise ValueError(f"malformed JPEG: {e}") from e
-        small = resize_nearest(img, 8, 8)
-        return {
-            "kind": "image/jpeg",
-            "width": int(img.shape[1]),
-            "height": int(img.shape[0]),
-            "n_frames": 1,
-            "features": [round(float(x), 4) for x in (
-                img.mean(axis=(0, 1)).tolist()
-                + small.astype(np.float64).std(axis=(0, 1)).tolist()
-            )],
-        }
-    raise ValueError("unsupported media container")
 
 
 def decode_stub(blob: bytes) -> dict:
@@ -947,17 +44,6 @@ MEDIA_META = StructType(
         StructField("doc_id", LongType(), False),
         StructField("n_bytes", IntegerType(), False),
         StructField("n_frames", IntegerType(), False),
-    ]
-)
-
-MEDIA_FEATURES = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("kind", StringType(), False),
-        StructField("width", IntegerType(), False),
-        StructField("height", IntegerType(), False),
-        StructField("n_frames", IntegerType(), False),
-        StructField("features", ArrayType(DoubleType()), False),
     ]
 )
 
@@ -982,31 +68,3 @@ def extract_media_meta(df: DataFrame) -> DataFrame:
             yield out
 
     return df.select("doc_id", "payload").mapInPandas(run, schema=MEDIA_META)
-
-
-def extract_media_features(df: DataFrame) -> DataFrame:
-    """binary payload -> REAL decoded features (PPM/WAV), Arrow-batched,
-    no shuffle; rows whose container is unsupported are dropped (the
-    skip-on-error semantics of the reference's OCR loop)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    m = decode_real(bytes(blob))
-                except ValueError:
-                    continue
-                rows.append(
-                    (
-                        int(doc_id), m["kind"], m["width"], m["height"],
-                        m["n_frames"], m["features"],
-                    )
-                )
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[f.name for f in MEDIA_FEATURES.fields],
-                )
-
-    return df.select("doc_id", "payload").mapInPandas(run, schema=MEDIA_FEATURES)

@@ -22,8 +22,8 @@ query, in definition order):
 - ``corpus``     q25-q28/q47-q48/q52-q54/q56-q65/q67/q69-q75 (range joins,
                  mixing, quantization, decontam, sketches, CDC, funnel)
 - ``vectors``    q29-q31/q43/q44 (cosine top-k, IVF, k-means)
-- ``pipeline_q`` q32/q34-q40/q42/q51/q66/q90-q96 (streaming, scorecards,
-                 the KG pipeline itself)
+- ``pipeline_q`` q32-q40/q42/q51/q66/q90-q96 (streaming, binary-payload
+                 plumbing, scorecards, the KG pipeline itself)
 - ``oracle_gate`` the Spark-vs-DuckDB comparison behind
                  tests/test_oracles.py and tools/check_oracles.py
 """

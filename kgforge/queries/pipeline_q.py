@@ -1,5 +1,5 @@
-"""Streaming, scorecards, and the KG pipeline itself:
-q32, q34-q40, q42, q51, q66, q90-q96 + doc_neardup_components /
+"""Streaming, binary-payload plumbing, scorecards, and the KG pipeline
+itself: q32-q40, q42, q51, q66, q90-q96 + doc_neardup_components /
 leakage_free_split.
 
 Split from the monolithic queries.py in round 5 (VERDICT r4 #8);
@@ -50,6 +50,28 @@ def q32_streaming_counts(spark, sf_dir):
     )
     sq.awaitTermination()
     return spark.table(qname)
+
+
+@q(
+    "q33_multimodal_meta",
+    """
+    SELECT (octet_length(encode(text)) % 7 + 1) AS n_frames,
+           count(*) AS n_docs,
+           sum(octet_length(encode(text)))::bigint AS total_bytes
+    FROM documents GROUP BY 1
+    """,
+)
+def q33_multimodal_meta(spark, sf_dir):
+    """Multimodal plumbing: binary payload -> mapInPandas decode stub ->
+    typed metadata agg (codec stubbed; Spark-side plumbing real)."""
+    from kgforge import multimodal
+
+    d = t(spark, sf_dir, "documents")
+    meta = multimodal.extract_media_meta(multimodal.with_binary_payload(d))
+    return meta.groupBy("n_frames").agg(
+        F.count("*").alias("n_docs"),
+        F.sum("n_bytes").alias("total_bytes"),
+    )
 
 
 @q("q90_kg_triples", None)

@@ -46,6 +46,39 @@ def test_json_sink(spark, tmp_path):
     assert rows[0]["n_channels"] == 4
 
 
+def test_binary_file_scan(spark, tmp_path):
+    """S5: binaryFile source + mapInPandas decode stub (the OCR-stage
+    plumbing, data_cleaner.py:102-141)."""
+    blobs = tmp_path / "media"
+    blobs.mkdir()
+    payloads = {}
+    for i in range(5):
+        data = f"fake image bytes {i}".encode() * (i + 1)
+        (blobs / f"img{i}.png").write_bytes(data)
+        payloads[f"img{i}.png"] = len(data)
+    df = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.png")
+        .load(str(blobs))
+    )
+    assert set(df.columns) == {"path", "modificationTime", "length", "content"}
+    got = {r.path.split("/")[-1]: r.length for r in df.collect()}
+    assert got == payloads
+
+    from kgforge.multimodal import MEDIA_META, decode_stub
+    import pandas as pd
+
+    def run(batches):
+        for pdf in batches:
+            metas = [decode_stub(b) for b in pdf["content"]]
+            out = pd.DataFrame(metas)
+            out.insert(0, "doc_id", range(len(out)))
+            yield out
+
+    meta = df.select("content").mapInPandas(run, schema=MEDIA_META)
+    assert sorted(r.n_bytes for r in meta.collect()) == sorted(payloads.values())
+
+
 def test_timestamp_tz_format(spark):
     """F12: ISO formatting in Africa/Addis_Ababa (telegram_scraper.py:162-163),
     checked against Python zoneinfo."""
