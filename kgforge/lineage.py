@@ -6,16 +6,21 @@ The reference's closest analogues are its hash-keyed result cache
 a lineage table: one row per (stage, part_id) with row count, an
 order-insensitive content fingerprint, and the wall time of the phase that
 committed it. Lineage is driver-sized (at most n_parts rows per stage and
-build): it is collected and appended from driver-side rows, and resume is
-a filter on the committed part_ids.
+build), so the driver does its bookkeeping without inference jobs or
+Python tasks: it reads the table with the declared ``LINEAGE`` schema and
+checks the rows it collects, appends its rows as an Arrow table (a local
+relation, written by a JVM-only job), and resume is a filter on the
+committed part_ids.
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from kgforge.materialize import read_parquet_if_exists
 from kgforge.schemas import LINEAGE
@@ -44,13 +49,36 @@ def lineage_rows(
     ).select(F.lit(stage).alias("stage"), "part_id", "n_rows", "fingerprint")
 
 
-def completed_parts(spark: SparkSession, lineage_path: str, stage: str) -> list[int]:
-    """part_ids already committed for ``stage`` (empty if no lineage yet)."""
-    lin = read_parquet_if_exists(spark, lineage_path)
+def committed_rows(
+    spark: SparkSession, lineage_path: str, stages: list[str]
+) -> list[Row]:
+    """(stage, part_id, fingerprint) of the committed rows of ``stages``,
+    from one collect (empty if no lineage yet).
+
+    The table is read with the declared ``LINEAGE`` schema, which needs no
+    inference job but reads a column the files lack as NULL. So any row
+    with a NULL stage, part_id or fingerprint raises here, on the driver,
+    instead of reading as "not committed"."""
+    lin = read_parquet_if_exists(spark, lineage_path, LINEAGE)
     if lin is None:
         return []
-    done = lin.filter(F.col("stage") == stage).select("part_id").collect()
-    return sorted({r.part_id for r in done})
+    stage = F.col("stage")
+    rows = (
+        lin.filter(stage.isin(*stages) | stage.isNull())
+        .select("stage", "part_id", "fingerprint")
+        .collect()
+    )
+    if any(v is None for r in rows for v in r):
+        raise RuntimeError(
+            f"lineage table at {lineage_path} has rows with a NULL stage, "
+            "part_id or fingerprint: it lacks a LINEAGE column"
+        )
+    return rows
+
+
+def completed_parts(spark: SparkSession, lineage_path: str, stage: str) -> list[int]:
+    """part_ids already committed for ``stage`` (empty if no lineage yet)."""
+    return sorted({r.part_id for r in committed_rows(spark, lineage_path, [stage])})
 
 
 def filter_pending(
@@ -69,8 +97,15 @@ def append_rows(
 ) -> None:
     """Append (stage, part_id, n_rows, fingerprint) rows in one write, each
     stamped with the committing phase's wall time: milliseconds since its
-    ``time.perf_counter()`` start ``t0``."""
+    ``time.perf_counter()`` start ``t0``.
+
+    The rows go to the JVM as one Arrow batch and become a local relation,
+    so the write runs no Python tasks. A ``pa.Table`` takes that path
+    whatever ``spark.sql.execution.arrow.pyspark.enabled`` says; a list of
+    rows would be pickled into a Python RDD instead."""
     wall_ms = int((time.perf_counter() - t0) * 1000)
-    append_lineage(
-        spark.createDataFrame([(*r, wall_ms) for r in rows], LINEAGE), lineage_path
+    table = pa.Table.from_pylist(
+        [dict(zip(LINEAGE.names, (*r, wall_ms))) for r in rows],
+        schema=to_arrow_schema(LINEAGE),
     )
+    append_lineage(spark.createDataFrame(table, LINEAGE), lineage_path)

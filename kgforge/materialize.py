@@ -28,6 +28,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 DEFAULT_PARTS = 64
 
@@ -35,18 +36,29 @@ DEFAULT_PARTS = 64
 TABLE_FORMAT = os.environ.get("KGFORGE_TABLE_FORMAT", "parquet")
 
 
-def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+def read_parquet_if_exists(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame | None:
     """``spark.read.parquet(path)``, or None when the path does not exist.
 
     Only "path does not exist" means "nothing committed yet". Schema drift,
     a corrupt footer or a transient FS error must propagate: swallowing
     them turns a damaged table into a silent rebuild or, for an upsert, a
     dynamic overwrite that deletes the rows already there (code-review r5).
+
+    ``schema`` skips the one-task schema-inference job, but a declared
+    schema reads a column the files lack as NULLs instead of raising. So
+    pass one only where the reader cannot be wrong about the columns: a
+    table this same call has just written, or one whose reader checks the
+    rows it uses (the lineage table, see ``lineage.committed_rows``). A
+    table an earlier call or version may have written is read without one,
+    so that inference catches the drift.
     """
     from pyspark.errors import AnalysisException
 
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
-        return spark.read.parquet(path)
+        return reader.parquet(path)
     except AnalysisException as e:
         if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
             return None

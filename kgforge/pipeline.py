@@ -23,11 +23,13 @@ import hashlib
 import time
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kgforge import canon, link, lineage, materialize
 from kgforge.extract import extract_mentions, with_clean, with_norm_surface
+from kgforge.schemas import CANON_MAP, MENTION_TABLE, TRIPLE_TABLE
 from kgforge.triples import mentions_to_triples
 
 STAGE_MENTIONS = "mentions"
@@ -108,8 +110,9 @@ def run_extraction(
     materialize.write_partitioned(mentions, paths.mentions)
 
     # read back ONLY the partitions this run wrote (partition pruning on the
-    # part_id directory column — no full-table scan on resume)
-    written = spark.read.parquet(paths.mentions).filter(
+    # part_id directory column — no full-table scan on resume), with the
+    # declared schema: this call just wrote them, so no inference job
+    written = spark.read.schema(MENTION_TABLE).parquet(paths.mentions).filter(
         F.col("part_id").isin(part_ids)
     )
     audit_mention_ids(written)  # raises on collision BEFORE any lineage append
@@ -129,13 +132,11 @@ def _graph_input_state(spark: SparkSession, paths: KGPaths) -> tuple[str, bool]:
     """``(input_fp, built)`` from one collect of lineage. ``input_fp`` is
     sha256 over the sorted (part_id, fingerprint) pairs of committed mention
     partitions; ``built`` is true iff lineage records a graph build from
-    exactly that state. A missing lineage table means no build; any other
-    read failure propagates."""
-    lin = materialize.read_parquet_if_exists(spark, paths.lineage)
-    rows = [] if lin is None else (
-        lin.filter(F.col("stage").isin(STAGE_MENTIONS, STAGE_GRAPH_INPUT))
-        .select("stage", "part_id", "fingerprint")
-        .collect()
+    exactly that state. A missing lineage table means no build; a row with
+    a NULL key column (``lineage.committed_rows``) or any other read
+    failure raises."""
+    rows = lineage.committed_rows(
+        spark, paths.lineage, [STAGE_MENTIONS, STAGE_GRAPH_INPUT]
     )
     mention_fps = sorted(
         (r.part_id, r.fingerprint) for r in rows if r.stage == STAGE_MENTIONS
@@ -299,7 +300,8 @@ def related_entities(
     from kgforge.triples import entity_key
 
     pairs, canon_map = _entity_comention_pairs(spark, paths)
-    raw = spark.createDataFrame([(s,) for s in seeds], "raw string")
+    # an Arrow local relation: no Python tasks for a driver-side list
+    raw = spark.createDataFrame(pa.table({"raw": pa.array(seeds, pa.string())}))
     parsed = raw.select(
         F.substring_index("raw", ":", 1).alias("entity_type"),
         F.trim(
@@ -363,9 +365,10 @@ def run_graph(
     # re-running LSH + CC over the full mention table — at 100 TB the
     # linking pass dwarfs the map's size (distinct surfaces only). Reading
     # it back also means the triple join consumes the committed artifact,
-    # not a recomputation.
+    # not a recomputation. Both read-backs below use the declared schema of
+    # a table this call has just written: no schema-inference job.
     build_canon_map(mentions, _canon_map_path(paths))
-    canon_map = spark.read.parquet(_canon_map_path(paths))
+    canon_map = spark.read.schema(CANON_MAP).parquet(_canon_map_path(paths))
 
     canonical = mentions.join(canon_map, ["entity_type", "norm_surface"])
     triples = mentions_to_triples(canonical, surface_col="canon_surface")
@@ -383,7 +386,7 @@ def run_graph(
         )
     else:
         materialize.write_partitioned(triples, paths.triples)
-    written = spark.read.parquet(paths.triples)
+    written = spark.read.schema(TRIPLE_TABLE).parquet(paths.triples)
     rows = lineage.lineage_rows(
         written, STAGE_TRIPLES, TRIPLE_CONTENT_COLS
     ).collect()

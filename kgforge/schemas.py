@@ -61,6 +61,40 @@ LINEAGE = StructType(
     ]
 )
 
+# The committed tables as a read of them returns them: the file columns in
+# write order, then the partition column part_id, which a partitioned read
+# puts last. Declaring them lets a read-back of a table the same call has
+# just written skip Spark's schema-inference job; tests/test_pipeline.py
+# checks that they equal what Spark infers after a build.
+MENTION_TABLE = StructType(
+    MENTIONS.fields
+    + [
+        StructField("norm_surface", StringType(), True),
+        StructField("mention_id", LongType(), True),
+        StructField("part_id", IntegerType(), True),
+    ]
+)
+
+# Distinct (entity_type, norm_surface) -> canonical surface (not partitioned).
+CANON_MAP = StructType(
+    [
+        StructField("entity_type", StringType(), True),
+        StructField("norm_surface", StringType(), True),
+        StructField("canon_surface", StringType(), True),
+    ]
+)
+
+# Deduplicated (subj, pred, obj) with min-repo provenance.
+TRIPLE_TABLE = StructType(
+    [
+        StructField("subj", StringType(), True),
+        StructField("pred", StringType(), True),
+        StructField("obj", StringType(), True),
+        StructField("repo", StringType(), True),
+        StructField("part_id", IntegerType(), True),
+    ]
+)
+
 # BIO tag vocabulary — single source of truth (SURVEY.md section 7.4 risk 2:
 # the reference ships three inconsistent label orders at train_ner.py:38,
 # interpret.py:80-83 and models/fine_tuned/.../config.json; we pin ONE).

@@ -28,7 +28,7 @@ def main() -> int:
     from kgforge.queries import REGISTRY, oracle_gate
     from kgforge.session import get_spark
 
-    spark = get_spark(master="local[8]", app_name="check-oracles")
+    spark = get_spark(app_name="check-oracles")
     spark.sparkContext.setLogLevel("ERROR")
     con = oracle_gate.duckdb_views(sf_dir)
     only = set(args.only.split(",")) if args.only else None
