@@ -138,13 +138,13 @@ def upsert_partitioned(
     """MERGE INTO at the materialize seam (VERDICT r4 #7) — CDC-style
     incremental upsert with per-partition pruning, parquet-emulated.
 
-    Semantics (the q74 full-outer-merge path, promoted from demo query to
-    engine capability): rows in ``changes`` whose ``key_cols`` match an
-    existing target row REPLACE it (column-wise change-wins coalesce, or a
-    custom ``resolve[col](change_col, target_col)`` expression — the
-    triples path passes ``F.least`` for provenance so merge stays
-    order-idempotent); unmatched change rows INSERT; target rows in
-    untouched partitions are NEVER read or rewritten.
+    Semantics (a full outer merge on ``key_cols``): rows in ``changes``
+    whose ``key_cols`` match an existing target row REPLACE it (column-wise
+    change-wins coalesce, or a custom ``resolve[col](change_col,
+    target_col)`` expression — the triples path passes ``F.least`` for
+    provenance so merge stays order-idempotent); unmatched change rows
+    INSERT; target rows in untouched partitions are NEVER read or
+    rewritten.
 
     Scale shape: ``part_col`` is a pure function of ``key_cols``
     (``with_part_id``), so a change row and its target row always live in

@@ -201,7 +201,7 @@ def entity_salience(
 
     Scale shape: the doc->entity edge build is one distinct + one
     co-partitioned self-equi-join on the doc key (bounded entities per
-    document, so linear like q81's co-purchase build); PageRank is
+    document, so the self-join is linear in mentions); PageRank is
     iters x (equi-join + partial-agg shuffle). Nothing driver-side but the
     node count.
     """
@@ -225,8 +225,8 @@ def _entity_comention_pairs(spark, paths: KGPaths):
     canonical entities — the shared graph both entity_salience (global
     PageRank) and related_entities (personalized PageRank) rank over.
     One distinct + one co-partitioned self-equi-join on the doc key
-    (bounded entities per document, so linear like q81's co-purchase
-    build).
+    (bounded entities per document, so the self-join is linear in
+    mentions).
 
     ``canon_map`` is the one run_graph committed. The read path never
     links: a map not built from the current mention state (same

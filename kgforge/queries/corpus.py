@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kgforge import textops, vectorops
+from kgforge import textops
 from kgforge.queries.core import REGISTRY, Q, q, t, _dec_sum, _exact_stddev
 from kgforge.queries.dedup import _SHINGLE_SQL
 import pandas as pd
@@ -49,7 +49,7 @@ def q54_range_join_bands(spark, sf_dir):
     band table is always tiny -> BroadcastNestedLoopJoin keeps the fact
     side map-only (no shuffle before the band agg); for two LARGE interval
     sets the same semantics would bucket both sides by overlapping coarse
-    grid cells first (the q34 blocking discipline)."""
+    grid cells first and equi-join on the cell (``grid_range_join``, q69)."""
     o = t(spark, sf_dir, "orders").select("o_totalprice")
     bands = spark.createDataFrame(
         [(i, float(lo), float(hi)) for i, (lo, hi) in enumerate(_BANDS)],

@@ -1,5 +1,5 @@
-"""Streaming, binary-payload plumbing, scorecards, and the KG pipeline
-itself: q32-q40, q42, q51, q66, q90-q96 + doc_neardup_components /
+"""Streaming, windows, scorecards, and the KG pipeline itself: q32,
+q35-q40, q42, q66, q83, q90-q96 + doc_neardup_components /
 leakage_free_split.
 
 Split from the monolithic queries.py in round 5 (VERDICT r4 #8);
@@ -11,9 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kgforge import textops, vectorops
+from kgforge import textops
 from kgforge.queries.core import REGISTRY, Q, q, t, _dec_sum, _exact_stddev
-from kgforge.queries.vectors import _BANDED_BUCKETS_SQL, _COS_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -52,28 +51,6 @@ def q32_streaming_counts(spark, sf_dir):
     return spark.table(qname)
 
 
-@q(
-    "q33_multimodal_meta",
-    """
-    SELECT (octet_length(encode(text)) % 7 + 1) AS n_frames,
-           count(*) AS n_docs,
-           sum(octet_length(encode(text)))::bigint AS total_bytes
-    FROM documents GROUP BY 1
-    """,
-)
-def q33_multimodal_meta(spark, sf_dir):
-    """Multimodal plumbing: binary payload -> mapInPandas decode stub ->
-    typed metadata agg (codec stubbed; Spark-side plumbing real)."""
-    from kgforge import multimodal
-
-    d = t(spark, sf_dir, "documents")
-    meta = multimodal.extract_media_meta(multimodal.with_binary_payload(d))
-    return meta.groupBy("n_frames").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_bytes").alias("total_bytes"),
-    )
-
-
 @q("q90_kg_triples", None)
 def q90_kg_triples(spark, sf_dir):
     """The full KG pipeline (north rule) on the seeded synthetic corpus:
@@ -102,107 +79,6 @@ def q91_mention_extraction(spark, sf_dir):
     return m.groupBy("entity_type").agg(
         F.count("*").alias("n_mentions"),
         F.countDistinct("surface").alias("n_surfaces"),
-    )
-
-
-@q(
-    "q34_embedding_neardup",
-    f"""
-    WITH b AS ({_BANDED_BUCKETS_SQL}),
-    cand AS (
-        SELECT DISTINCT l.vec_id AS a_id, r.vec_id AS b_id
-        FROM b l JOIN b r
-          ON l.band = r.band AND l.bucket = r.bucket AND l.vec_id < r.vec_id
-    )
-    SELECT a_id, b_id, round({_COS_SQL}, 6) AS cos_sim
-    FROM cand
-    JOIN embeddings a ON a.vec_id = a_id
-    JOIN embeddings q ON q.vec_id = b_id
-    ORDER BY cos_sim DESC, a_id, b_id LIMIT 20
-    """,
-)
-def q34_embedding_neardup(spark, sf_dir):
-    """Embedding near-dup: banded sign-LSH blocked self-join (never
-    O(n^2); any-band match, AND-of-r bits within a band) -> exact cosine on
-    candidates -> top-20 pairs. Production variant with hot-bucket salting:
-    vectorops.embedding_candidate_pairs."""
-    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    bb = vectorops.with_band_buckets(e)
-    l = bb.select("band", "bucket", F.col("vec_id").alias("a_id"))
-    r = bb.select(
-        "band", "bucket",
-        F.col("vec_id").alias("b_id"), F.col("embedding").alias("vec_b"),
-    )
-    cand = (
-        l.join(r, ["band", "bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    withv = cand.join(
-        e.select(F.col("vec_id").alias("a_id"), F.col("embedding").alias("vec_a")),
-        "a_id",
-    )
-    cos = F.round(vectorops.cosine(F.col("vec_a"), F.col("vec_b")), 6)
-    return (
-        withv.select("a_id", "b_id", cos.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), "a_id", "b_id")
-        .limit(20)
-    )
-
-
-_PROBED_BUCKETS_SQL = "\nUNION ALL\n".join(
-    [
-        f"SELECT vec_id, embedding, {b} AS band, "
-        f"{vectorops.band_bucket_sql(b)} AS bucket FROM embeddings"
-        for b in range(vectorops.EMB_BANDS)
-    ]
-    + [vectorops.band_probe_bucket_sql(b) for b in range(vectorops.EMB_BANDS)]
-)
-
-
-@q(
-    "q51_embedding_neardup_multiprobe",
-    f"""
-    WITH b AS ({_PROBED_BUCKETS_SQL}),
-    cand AS (
-        SELECT DISTINCT l.vec_id AS a_id, r.vec_id AS b_id
-        FROM b l JOIN b r
-          ON l.band = r.band AND l.bucket = r.bucket AND l.vec_id < r.vec_id
-    )
-    SELECT a_id, b_id, round({_COS_SQL}, 6) AS cos_sim
-    FROM cand
-    JOIN embeddings a ON a.vec_id = a_id
-    JOIN embeddings q ON q.vec_id = b_id
-    ORDER BY cos_sim DESC, a_id, b_id LIMIT 20
-    """,
-)
-def q51_embedding_neardup_multiprobe(spark, sf_dir):
-    """Multi-probe embedding near-dup (VERDICT r2 next-round #8): each band
-    probes its exact bucket AND the flipped-lowest-|margin| bucket — recall
-    recovered without more bands, 2x candidate rows, same join shape as
-    q34. Fully oracle-checked (exact-decimal margins make the probe choice
-    engine-identical), not rows-only."""
-    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    bb = vectorops.with_band_buckets_multiprobe(e)
-    l = bb.select("band", "bucket", F.col("vec_id").alias("a_id"))
-    r = bb.select(
-        "band", "bucket",
-        F.col("vec_id").alias("b_id"), F.col("embedding").alias("vec_b"),
-    )
-    cand = (
-        l.join(r, ["band", "bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    withv = cand.join(
-        e.select(F.col("vec_id").alias("a_id"), F.col("embedding").alias("vec_a")),
-        "a_id",
-    )
-    cos = F.round(vectorops.cosine(F.col("vec_a"), F.col("vec_b")), 6)
-    return (
-        withv.select("a_id", "b_id", cos.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), "a_id", "b_id")
-        .limit(20)
     )
 
 

@@ -9,7 +9,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kgforge import textops, vectorops
 from kgforge.queries.core import REGISTRY, Q, q, t, _dec_sum, _exact_stddev
 
 

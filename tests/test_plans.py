@@ -66,8 +66,7 @@ def test_partial_aggregation_before_shuffle(spark):
 
 
 def test_textops_stay_jvm_side(spark):
-    for name in ("q22_minhash_lsh", "q24_simhash", "q25_quality_scores",
-                 "q29_cosine_topk"):
+    for name in ("q22_minhash_lsh", "q24_simhash", "q25_quality_scores"):
         plan = plan_of(spark, name)
         assert "BatchEvalPython" not in plan, name
         assert "ArrowEvalPython" not in plan, name
@@ -112,16 +111,6 @@ def test_stratified_sample_filter_is_map_side(spark):
     assert "md5" in scan, scan
 
 
-def test_ivf_argmin_is_partial_group_limit(spark):
-    """q43's nearest-centroid row_number must be optimized into a PARTIAL
-    WindowGroupLimit before the exchange (map-side argmin: one row per
-    vector shuffles, not k) and the final top-k must be
-    TakeOrderedAndProject."""
-    plan = plan_of(spark, "q43_ivf_topk")
-    assert "WindowGroupLimit" in plan and "Partial" in plan, plan[:2000]
-    assert "TakeOrderedAndProject" in plan
-
-
 def test_mention_table_partition_pruning(spark, tmp_path):
     """part_id filter on the written mention table prunes directories."""
     from kgforge.pipeline import KGPaths, run_extraction
@@ -138,81 +127,6 @@ def test_mention_table_partition_pruning(spark, tmp_path):
     # only one directory's files are scanned
     scan = [ln for ln in plan.splitlines() if "FileScan" in ln]
     assert scan, plan
-
-
-def test_aqe_skew_join_splits_hot_key(spark):
-    """AQE skew-join handling (north rule): with a deliberately skewed join
-    key and forced-low thresholds, the final adaptive plan marks the
-    sort-merge join as skew-handled."""
-    import pyspark.sql.functions as F
-
-    skew_conf = {
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "16KB",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16KB",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    old = {k: spark.conf.get(k, None) for k in skew_conf}
-    try:
-        for k, v in skew_conf.items():
-            spark.conf.set(k, v)
-        # 90% of left rows share one key; right side is uniform
-        left = spark.range(0, 200_000).select(
-            F.when(F.col("id") % 10 < 9, F.lit(7)).otherwise(F.col("id") % 1000)
-            .alias("k"),
-            F.sha2(F.col("id").cast("string"), 256).alias("pad"),
-        )
-        right = spark.range(0, 1000).select(
-            F.col("id").alias("k"), F.lit("dim").alias("v")
-        )
-        j = left.join(right, "k").groupBy("v").count()
-        j.collect()
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "skew=true" in plan, plan[:1500]
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
-    """Bucketing for co-located joins (task brief): two tables bucketed on
-    the join key join WITHOUT an Exchange on either side — the shuffle the
-    same join pays on plain parquet."""
-    import pyspark.sql.functions as F
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        left = spark.range(0, 50_000).select(
-            F.col("id").alias("k"), (F.col("id") % 97).alias("a")
-        )
-        right = spark.range(0, 50_000).select(
-            F.col("id").alias("k"), (F.col("id") % 7).alias("b")
-        )
-        left.write.bucketBy(8, "k").sortBy("k").mode("overwrite").saveAsTable(
-            "kgforge_bkt_left"
-        )
-        right.write.bucketBy(8, "k").sortBy("k").mode("overwrite").saveAsTable(
-            "kgforge_bkt_right"
-        )
-        j = spark.table("kgforge_bkt_left").join(
-            spark.table("kgforge_bkt_right"), "k"
-        )
-        j.collect()
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan[:1500]
-
-        # control: identical join on plain parquet DOES shuffle
-        p = left.join(right, "k")
-        p.collect()
-        plan2 = p._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plan2
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS kgforge_bkt_left")
-        spark.sql("DROP TABLE IF EXISTS kgforge_bkt_right")
 
 
 def test_global_shuffle_sort_is_range_partitioned(spark):
@@ -245,9 +159,9 @@ def test_grid_range_join_is_shuffled_equi_join(spark):
 def test_grid_range_join_hot_cell_aqe_skew_split(spark):
     """VERDICT r4 #5: a hot grid cell (80% of points in one cell — a hot
     value range like a price spike) must be split by AQE skew-join, not
-    serialized into one straggler task. Same forced-low thresholds as
-    test_aqe_skew_join_splits_hot_key, but driven through grid_range_join
-    itself so the skew path of the PRODUCTION operator is what's pinned."""
+    serialized into one straggler task. Forced-low skew thresholds, driven
+    through grid_range_join itself so the skew path of the PRODUCTION
+    operator is what's pinned."""
     import pyspark.sql.functions as F
 
     from kgforge.queries import grid_range_join
