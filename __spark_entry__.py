@@ -6,8 +6,9 @@
   plus the training-data-pipeline ops (dedup / similarity / text
   analysis) — see the kgforge/queries/ package.
 - ``oracle_sql()``: the DuckDB-equivalent ANSI SQL for every
-  SQL-expressible query (rows-only entries: the iterative-CC KG pipeline
-  and the batched NER extraction, which have no SQL equivalent).
+  SQL-expressible query (rows-only entries: the sketch percentiles and the
+  HLL distinct count, whose estimates differ by engine by design and are
+  checked against exact values in pytest instead).
 """
 
 from __future__ import annotations

@@ -21,8 +21,6 @@ query, in definition order):
                  sampling, packing, global shuffle)
 - ``corpus``     q25-q28/q47-q48/q52-q54/q56-q65/q67/q69-q75 (range joins,
                  mixing, quantization, decontam, sketches, CDC, funnel)
-- ``pipeline_q`` q32/q35-q40/q42/q66/q83/q90-q96 (streaming, windows,
-                 scorecards, the KG pipeline itself)
 - ``oracle_gate`` the Spark-vs-DuckDB comparison behind
                  tests/test_oracles.py and tools/check_oracles.py
 """
@@ -49,8 +47,3 @@ from kgforge.queries.dedup import (  # noqa: F401
 )
 from kgforge.queries import corpus as _corpus  # noqa: E402,F401
 from kgforge.queries.corpus import grid_range_join  # noqa: F401
-from kgforge.queries import pipeline_q as _pipeline_q  # noqa: E402,F401
-from kgforge.queries.pipeline_q import (  # noqa: F401
-    doc_neardup_components,
-    leakage_free_split,
-)

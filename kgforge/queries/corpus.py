@@ -931,10 +931,9 @@ def q62_intersect_except(spark, sf_dir):
     """,
 )
 def q63_unpivot_metrics(spark, sf_dir):
-    """Wide-to-long unpivot (the inverse of q38's pivot) via ``stack`` —
-    per-flag metric columns melt into (flag, metric, value) rows. stack is
-    a generator expression evaluated map-side post-agg: no extra shuffle
-    beyond the agg itself."""
+    """Wide-to-long unpivot via ``stack`` — per-flag metric columns melt
+    into (flag, metric, value) rows. stack is a generator expression
+    evaluated map-side post-agg: no extra shuffle beyond the agg itself."""
     li = t(spark, sf_dir, "lineitem")
     agg = li.groupBy("l_returnflag").agg(
         _dec_sum(F.col("l_quantity")).alias("qty"),
@@ -1086,8 +1085,8 @@ def q65_dedup_keep_best(spark, sf_dir):
     arbitrary one — the policy real training pipelines want (drop the
     truncated scrape, keep the full page). One window over the key
     partitioning does rank + group size in a single shuffle; at 100 TB the
-    same shape runs per near-dup CLUSTER (q93's CC output) with a learned
-    quality score in place of length."""
+    same shape runs per near-dup CLUSTER (a connected component of MinHash
+    candidate pairs) with a learned quality score in place of length."""
     d = t(spark, sf_dir, "documents")
     keyed = d.select(
         "doc_id",

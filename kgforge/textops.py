@@ -6,8 +6,7 @@ scoring and token statistics — all pure Catalyst (whole-stage codegen, no
 Python), each with a DuckDB-expressible oracle in kgforge.queries.
 
 Portability note: near-dup primitives hash with ``md5`` (identical hex in
-Spark and DuckDB) so correctness is oracle-checkable; the scale path would
-swap ``xxhash64`` in for ~4x cheaper signatures with the same structure.
+Spark and DuckDB), so each one is oracle-checkable.
 """
 
 from __future__ import annotations
@@ -225,27 +224,6 @@ def with_simhash16_md5(
     for e in bits[1:]:
         sig = sig + e
     return hashed.withColumn(out, sig).drop("_sh16_m")
-
-
-def minhash_band_sig_fast(
-    shingle_arr: Column, band: int, rows_per_band: int = 2
-) -> Column:
-    """Scale-path MinHash band signature: xxhash64 instead of md5 (~4x
-    cheaper, JVM long instead of 32-char string through every shuffle),
-    AND-combining ``rows_per_band`` independent min-hashes like
-    kgforge.link.minhash_blocks. Not DuckDB-expressible — the md5 twin
-    (minhash_band_sig) stays the oracle surface; this is what production
-    dedup (the q93 path) runs."""
-    mins = [
-        F.array_min(
-            F.transform(
-                shingle_arr,
-                lambda s, r=r: F.xxhash64(F.lit(band * rows_per_band + r), s),
-            )
-        )
-        for r in range(rows_per_band)
-    ]
-    return F.xxhash64(*mins)
 
 
 def stopword_ratio(col: Column) -> Column:

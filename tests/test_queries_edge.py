@@ -4,7 +4,6 @@ to the new operators must degrade safely and identically in both engines."""
 from __future__ import annotations
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -47,17 +46,16 @@ def test_q70_hash_safe_for_huge_doc_ids(spark):
     assert all(0 <= h < 1000000 for h in spark_h.values())
 
 
-def test_q71_constant_vector_quantizes_to_zero(spark):
+def test_q71_constant_vector_quantizes_to_zero(spark, tmp_path):
     """A constant embedding (max == min, scale 0) must quantize every
     element to 0 — not Spark-NaN-folded-to-0 vs DuckDB-NULL."""
     from kgforge.queries import REGISTRY
-    import os
 
     rows = [
         (0, [0.5, 0.5, 0.5, 0.5], 1),     # constant -> qsum 0
         (1, [0.0, 1.0, 2.0, 3.0], 1),     # ramp -> 0+85+170+255 = 510
     ]
-    tmp = "/tmp/kgforge_test_q71_const"
+    tmp = str(tmp_path)
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     ).write.mode("overwrite").parquet(f"{tmp}/embeddings.parquet")
@@ -106,39 +104,3 @@ def test_hopping_window_boundary_event(spark):
     starts = sorted(r.win_start_s for r in rows)
     e = int(ts.replace(tzinfo=datetime.timezone.utc).timestamp())
     assert starts == [e - 300, e]
-
-
-def test_upsert_empty_change_set_is_noop(spark, tmp_path):
-    """Upserting zero changes must leave the table untouched (no partition
-    is 'touched', nothing is rewritten)."""
-    from kgforge.materialize import upsert_partitioned
-
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [("a", "p", "x", "r1")],
-        "subj string, pred string, obj string, repo string",
-    )
-    upsert_partitioned(base, path, ["subj", "pred", "obj"], n_parts=4)
-    before = {tuple(r) for r in spark.read.parquet(path).collect()}
-    upsert_partitioned(
-        base.filter(F.lit(False)), path, ["subj", "pred", "obj"], n_parts=4
-    )
-    assert {tuple(r) for r in spark.read.parquet(path).collect()} == before
-
-
-def test_upsert_refuses_mismatched_n_parts(spark, tmp_path):
-    """A batch merged with a different n_parts than the table was built
-    with must FAIL FAST (the join would otherwise insert duplicates while
-    stale rows survive — code-review r5)."""
-    from kgforge.materialize import upsert_partitioned
-
-    path = str(tmp_path / "tbl")
-    rows = [(f"s{i}", "p", f"o{i}", "r") for i in range(40)]
-    base = spark.createDataFrame(
-        rows, "subj string, pred string, obj string, repo string"
-    )
-    upsert_partitioned(base, path, ["subj", "pred", "obj"], n_parts=64)
-    with pytest.raises(ValueError, match="n_parts"):
-        upsert_partitioned(
-            base.limit(5), path, ["subj", "pred", "obj"], n_parts=32
-        )

@@ -10,4 +10,4 @@ def test_registry_counts_match_docs():
     counts. The documented split lives HERE, once; update this test and
     both docs together when the registry changes."""
     oracle = sum(1 for qd in REGISTRY.values() if qd.sql is not None)
-    assert (len(REGISTRY), oracle) == (79, 69), (len(REGISTRY), oracle)
+    assert (len(REGISTRY), oracle) == (61, 59), (len(REGISTRY), oracle)

@@ -114,32 +114,6 @@ def test_hll_distinct_within_error_bounds(spark):
         assert abs(r.approx_users - r.exact_users) <= max(0.1 * r.exact_users, 2), r
 
 
-def test_leakage_free_split_keeps_neardups_together(spark):
-    """The no-leakage invariant: near-duplicate docs (same MinHash cluster)
-    must land in the SAME split — the guarantee a per-doc hash split
-    cannot give."""
-    from kgforge.queries import leakage_free_split
-
-    base = "alpha beta gamma delta epsilon zeta eta theta"
-    rows = [(1, base), (2, base)]  # exact near-dup pair -> one cluster
-    rows += [(100 + i, f"unique{i} text body number{i} tail{i} more{i}")
-             for i in range(40)]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    s = leakage_free_split(d)
-    got = {r.doc_id: (r.split, r.component_id) for r in s.collect()}
-    assert len(got) == 42  # every doc assigned exactly once
-    # the dup pair shares a component and therefore a split
-    assert got[1] == got[2]
-    # deterministic across a second evaluation
-    got2 = {r.doc_id: (r.split, r.component_id) for r in s.collect()}
-    assert got == got2
-    # component -> split is a function (no cluster spans two splits)
-    comp_splits = {}
-    for split, comp in got.values():
-        comp_splits.setdefault(comp, set()).add(split)
-    assert all(len(v) == 1 for v in comp_splits.values())
-
-
 def test_decontaminate_plan_broadcasts_eval_side(spark):
     eval_df = _docs(spark, [(100, "alpha beta gamma delta")])
     corpus = _docs(spark, [(1, "x alpha beta gamma y")])
