@@ -3,12 +3,10 @@
 - ``entry(spark)``: flagship query (TPC-H-Q1-shaped pricing summary) on
   /root/testdata/sf0.001.
 - ``queries()``: one entry per implemented operator family from SURVEY.md §2
-  plus the training-data-pipeline ops (dedup / similarity / text
+  plus the corpus-pipeline ops (decontamination / quality / text
   analysis) — see the kgforge/queries/ package.
-- ``oracle_sql()``: the DuckDB-equivalent ANSI SQL for every
-  SQL-expressible query (rows-only entries: the sketch percentiles and the
-  HLL distinct count, whose estimates differ by engine by design and are
-  checked against exact values in pytest instead).
+- ``oracle_sql()``: the DuckDB-equivalent ANSI SQL of every query (every
+  entry has oracle SQL).
 """
 
 from __future__ import annotations
@@ -32,4 +30,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: qd.sql for name, qd in REGISTRY.items() if qd.sql is not None}
+    return {name: qd.sql for name, qd in REGISTRY.items()}

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kgforge.bio import SPAN_STRUCT, decode_spans_udf
+from kgforge.bio import decode_spans_udf
 
 
 def spans_table(sentences: DataFrame, tags_col: str = "tags") -> DataFrame:

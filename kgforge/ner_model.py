@@ -20,7 +20,6 @@ N1-N3 repair rules are exercised end-to-end.
 
 from __future__ import annotations
 
-import hashlib
 import re
 import zlib
 

@@ -13,12 +13,12 @@ from pyspark.sql import functions as F
 @dataclass
 class Q:
     fn: Callable[[SparkSession, str], DataFrame]
-    sql: str | None  # None -> driver runs rows-only check
+    sql: str
 
 
 REGISTRY: dict[str, Q] = {}
 
-def q(name: str, sql: str | None):
+def q(name: str, sql: str):
     def deco(fn):
         REGISTRY[name] = Q(fn, sql)
         return fn
@@ -38,7 +38,7 @@ def t(
     single parquet files with single-digit row-group counts, and a row
     group is the parallelism quantum of a parquet scan — documents.parquet
     at sf1.0 is ONE row group, so every expression in the scan stage ran
-    on ONE core of 32 (measured: q24 21.6s single-task vs ~1s of work at
+    on ONE core of 32 (measured: hashing 21.6s single-task vs ~1s of work at
     full width). The repartition is a few MB of shuffle that buys full
     fan-out of the expensive projection. Scale note: this is input-layout
     repair, not local-mode tuning — a 100 TB table laid out in many

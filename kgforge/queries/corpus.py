@@ -1,8 +1,8 @@
 """Corpus/pretraining-pipeline operators: range joins (incl. the
 large-large grid path), temperature mixing, quantization, decontam,
-TF-IDF, quality/PII/repetition, sketches, CDC upsert, funnel, LOCF,
-keep-best dedup, cogroup, lang-id, fingerprints: q25-q28, q47-q48,
-q52-q54, q56-q65, q67, q69-q75.
+TF-IDF, quality/PII/repetition, CDC upsert, funnel, LOCF, keep-best
+dedup, cogroup, lang-id, fingerprints: q25-q28, q47, q52-q54, q56-q57,
+q60-q65, q67, q69-q74, q76-q78, q81-q82.
 
 Split from the monolithic queries.py in round 5 (VERDICT r4 #8);
 every (fn, sql) pair unchanged.
@@ -10,14 +10,20 @@ every (fn, sql) pair unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kgforge import textops
-from kgforge.queries.core import REGISTRY, Q, q, t, _dec_sum, _exact_stddev
-from kgforge.queries.dedup import _SHINGLE_SQL
+from kgforge.queries.core import q, t, _dec_sum
 import pandas as pd
 
+
+_SHINGLE_SQL = """
+        list_transform(
+            range(1, greatest(len(string_split(text, ' ')) - 2, 1) + 1),
+            i -> array_to_string((string_split(text, ' '))[i:i+2], ' ')
+        )
+"""
 
 _EMAIL_PAT = r"[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}"
 _LONGNUM_PAT = r"[0-9]{9,}"
@@ -166,14 +172,14 @@ def q69_range_join_grid(spark, sf_dir):
     """,
 )
 def q70_domain_mix_temperature(spark, sf_dir):
-    """Temperature-weighted domain mixing (the pretraining-mix op behind
-    q45's flat-rate sampling): per-source sampling rates DERIVED from the
-    data — weight w_s = n_s^T with T=0.5 (sqrt upsamples rare sources,
+    """Temperature-weighted domain mixing (the pretraining-mix op):
+    per-source sampling rates DERIVED from the data — weight w_s = n_s^T
+    with T=0.5 (sqrt upsamples rare sources,
     the standard multilingual/multi-domain reweighting), target half the
     corpus, rate_s = min(1, share_s * N_target / n_s) quantized to ppm so
     the keep decision is an exact INTEGER comparison in both engines.
     Keep iff lehmer_hash(doc_id) ppm-bucket < rate_ppm: deterministic
-    across engines/partitionings like q45, but with the rate table
+    across engines/partitionings, with the rate table
     computed from a tiny per-source agg that is broadcast back — the
     corpus side stays one map-side filter (no shuffle of the 100 TB fact
     table). The hash is a MINSTD Lehmer step ((id mod 2^31-1) * 48271
@@ -467,64 +473,6 @@ def q53_repetition_ratio(spark, sf_dir):
 
 
 @q(
-    "q75_countmin_heavy_hitters",
-    """
-    WITH toks AS (
-        SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-    ), exact AS (
-        SELECT tok, count(*) AS exact_n FROM toks GROUP BY tok
-    ), cm AS (
-        SELECT d, substr(md5(d || ':' || tok), 1, 2) AS bucket,
-               count(*) AS bucket_n
-        FROM toks, (SELECT unnest([0, 1, 2]) AS d)
-        GROUP BY d, bucket
-    ), topk AS (
-        SELECT tok, exact_n FROM exact
-        ORDER BY exact_n DESC, tok LIMIT 10
-    )
-    SELECT t.tok, t.exact_n,
-           min(c.bucket_n)::bigint AS est_n,
-           (min(c.bucket_n) - t.exact_n)::bigint AS overcount
-    FROM topk t JOIN cm c
-      ON c.bucket = substr(md5(c.d || ':' || t.tok), 1, 2)
-    GROUP BY t.tok, t.exact_n
-    """,
-)
-def q75_countmin_heavy_hitters(spark, sf_dir):
-    """Count-min sketch heavy hitters — the third mergeable sketch next to
-    q58 (quantiles) and q59 (distinct): token frequencies collapse into a
-    depth=3 x width=256 counter grid (bucket = 2-hex-char md5 prefix, so
-    the whole construction is engine-portable and HASH-verified, unlike
-    typical binary sketch blobs), estimate = min over depths of the
-    token's bucket count. At 100 TB the grid is 768 partially-aggregated
-    counters — mergeable map-side state where an exact token count would
-    shuffle the full vocabulary; the top-10 exact counts ride along so the
-    result exposes the one-sided overcount (est >= exact always, bounded
-    by pytest)."""
-    d = t(spark, sf_dir, "documents")
-    toks = d.select(F.explode(F.split("text", " ")).alias("tok"))
-    exact = toks.groupBy("tok").agg(F.count("*").alias("exact_n"))
-    depths = spark.range(3).select(F.col("id").cast("int").alias("d"))
-    bucket_of = lambda dcol, tokcol: F.substring(  # noqa: E731
-        F.md5(F.concat(dcol.cast("string"), F.lit(":"), tokcol)), 1, 2
-    )
-    cm = (
-        toks.crossJoin(F.broadcast(depths))
-        .groupBy("d", bucket_of(F.col("d"), F.col("tok")).alias("bucket"))
-        .agg(F.count("*").alias("bucket_n"))
-    )
-    topk = exact.orderBy(F.col("exact_n").desc(), "tok").limit(10)
-    probed = topk.join(
-        F.broadcast(cm),
-        F.col("bucket") == bucket_of(F.col("d"), F.col("tok")),
-    )
-    return probed.groupBy("tok", "exact_n").agg(
-        F.min("bucket_n").alias("est_n"),
-        (F.min("bucket_n") - F.col("exact_n")).alias("overcount"),
-    )
-
-
-@q(
     "q74_cdc_upsert",
     """
     WITH updates AS (
@@ -628,8 +576,8 @@ def q72_duplicated_window_ratio(spark, sf_dir):
     one per-doc partial agg. Skew note: a count window cannot be
     AQE-skew-split the way the old join could; the shingle key domain is
     per-doc-distinct 3-grams, whose hottest key is bounded by doc
-    frequency, and the salted-agg fallback (q80's shape) is the
-    documented escape hatch if a corpus ever concentrates one window."""
+    frequency; a two-phase aggregate salted on the ngram is the escape
+    hatch if a corpus ever concentrates one window."""
     d = t(spark, sf_dir, "documents", spread=True)
     sh = d.select(
         "doc_id",
@@ -764,70 +712,6 @@ def q47_pii_redaction(spark, sf_dir):
         F.sum(F.when(redacted != F.col("text"), 1).otherwise(0)).alias(
             "n_redacted_docs"
         ),
-    )
-
-
-@q(
-    "q48_length_percentiles",
-    """
-    SELECT lang,
-           round(quantile_cont(n_chars, 0.5), 4) AS p50,
-           round(quantile_cont(n_chars, 0.9), 4) AS p90,
-           round(quantile_cont(n_chars, 0.99), 4) AS p99,
-           max(n_chars) AS max_chars
-    FROM documents GROUP BY lang
-    """,
-)
-def q48_length_percentiles(spark, sf_dir):
-    """Exact length percentiles per language (corpus QC): Spark
-    percentile() and DuckDB quantile_cont share the linear-interpolation
-    definition, so the oracle is exact. At 100 TB swap percentile_approx
-    (t-digest) in — deliberately NOT oracle'd (algorithm-dependent)."""
-    d = t(spark, sf_dir, "documents")
-    return d.groupBy("lang").agg(
-        F.round(F.percentile("n_chars", F.lit(0.5)), 4).alias("p50"),
-        F.round(F.percentile("n_chars", F.lit(0.9)), 4).alias("p90"),
-        F.round(F.percentile("n_chars", F.lit(0.99)), 4).alias("p99"),
-        F.max("n_chars").alias("max_chars"),
-    )
-
-
-@q("q58_sketch_percentiles", None)
-def q58_sketch_percentiles(spark, sf_dir):
-    """The 100 TB percentile path q48's docstring promises: mergeable
-    sketch quantiles via percentile_approx (Greenwald-Khanna variant,
-    accuracy 10000 -> max rank error 1e-4). One partial-agg pass, constant
-    state per partition — an exact percentile at 100 TB needs a full sort
-    per group, a sketch needs one mergeable summary. Rows-only by design:
-    sketch outputs are algorithm-dependent (DuckDB's approx_quantile uses
-    t-digest), so cross-engine value equality is the WRONG check — the
-    pytest asserts each sketch value within rank tolerance of the exact
-    q48 percentile instead."""
-    d = t(spark, sf_dir, "documents")
-    return d.groupBy("lang").agg(
-        F.percentile_approx("n_chars", F.lit(0.5), F.lit(10000)).alias("p50"),
-        F.percentile_approx("n_chars", F.lit(0.9), F.lit(10000)).alias("p90"),
-        F.percentile_approx("n_chars", F.lit(0.99), F.lit(10000)).alias("p99"),
-        F.count("*").alias("n_docs"),
-    )
-
-
-@q("q59_hll_distinct", None)
-def q59_hll_distinct(spark, sf_dir):
-    """Sketch-family distinct counting: Apache DataSketches HLL via
-    hll_sketch_agg/hll_sketch_estimate (mergeable across partitions and
-    across DAYS — the streaming/incremental path that exact countDistinct
-    cannot give at 100 TB) next to approx_count_distinct (HyperLogLog++)
-    and the exact count as the in-row reference. Rows-only: estimates are
-    algorithm/seed-dependent across engines; the pytest bounds relative
-    error instead (HLL lgK=12 standard error ~1.6%)."""
-    e = t(spark, sf_dir, "events")
-    return e.groupBy("event_type").agg(
-        F.hll_sketch_estimate(F.hll_sketch_agg("user_id", F.lit(12))).alias(
-            "hll_users"
-        ),
-        F.approx_count_distinct("user_id").alias("approx_users"),
-        F.countDistinct("user_id").alias("exact_users"),
     )
 
 
@@ -1132,7 +1016,7 @@ def q67_cogroup_funnel(spark, sf_dir):
     AFTER that click, and the lag — computed by cogrouping the click and
     purchase streams on user_id and merging each pair of per-user frames
     in one Python function. The ORACLE is plain SQL (min + conditional
-    join), so the cogroup path is hash-verified, not rows-only. Scale
+    join), so the cogroup path is hash-verified. Scale
     shape: one co-partitioned shuffle of both sides on the key, then
     embarrassingly parallel per-key Arrow batches; the per-key python
     work is O(events of that user). Epoch microseconds emitted as longs

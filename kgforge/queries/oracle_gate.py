@@ -1,10 +1,9 @@
-"""Cross-engine oracle gate: run a registry entry on Spark and, when it has
-oracle SQL, its DuckDB twin over the same parquet tables.
+"""Cross-engine oracle gate: run a registry entry on Spark and its DuckDB
+twin (the entry's oracle SQL) over the same parquet tables.
 
-An entry with SQL passes when both engines return the same row count, the
-same column names and the same order-insensitive value multiset (cells
-stringified, columns sorted by name, rows sorted). A rows-only entry
-(``sql is None``) passes when it runs and collects.
+An entry passes when both engines return the same row count, the same
+column names and the same order-insensitive value multiset (cells
+stringified, columns sorted by name, rows sorted).
 
 One routine for both callers: ``tests/test_oracles.py`` checks every entry
 at sf0.001 in tier-1, and ``tools/check_oracles.py`` runs the same check at
@@ -72,6 +71,4 @@ def check(
     """Run one registry entry: (Spark row count, problems). Errors in
     either engine propagate."""
     sdf = entry.fn(spark, sf_dir).toPandas()
-    if entry.sql is None:
-        return len(sdf), []
     return len(sdf), compare(sdf, con.execute(entry.sql).df())

@@ -6,10 +6,10 @@ every (fn, sql) pair unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from kgforge.queries.core import REGISTRY, Q, q, t, _dec_sum, _exact_stddev
+from kgforge.queries.core import q, t, _dec_sum, _exact_stddev
 
 
 # ---------------------------------------------------------------------------
@@ -489,83 +489,4 @@ def q17_weighted_score(spark, sf_dir):
         F.round(
             F.least(F.lit(100.0), 0.4 * 100.0 * bal_norm + 0.6 * 100.0 * ord_norm), 4
         ).alias("lending_score"),
-    )
-
-
-
-
-@q(
-    "q79_hopping_window",
-    """
-    WITH x AS (
-        SELECT (epoch_ms(ts) // 300000) * 300000 AS w0, value FROM events
-    ), h AS (
-        SELECT w0 AS w, value FROM x
-        UNION ALL
-        SELECT w0 - 300000 AS w, value FROM x
-    )
-    SELECT w // 1000 AS win_start_s, count(*) AS n_events,
-           sum(CAST(value AS DECIMAL(18,2)))::double AS sum_value
-    FROM h GROUP BY w
-    """,
-)
-def q79_hopping_window(spark, sf_dir):
-    """Hopping (sliding) time windows — 10-minute windows advancing every
-    5 minutes — via the batch equivalence: each event belongs to exactly
-    size/slide = 2 hop-aligned windows, so explode to both window starts
-    and hash-aggregate (the plan Structured Streaming's window() operator
-    produces, minus its timezone-dependent alignment — epoch-millis
-    arithmetic is exact and engine-portable). Scale shape: map-side
-    explode factor 2, one partial-agg shuffle keyed by window start; no
-    range join, no per-window rescan."""
-    e = t(spark, sf_dir, "events")
-    ms = F.unix_millis(F.col("ts").cast("timestamp"))
-    w0 = F.floor(ms / 300000) * 300000
-    hopped = e.select(
-        F.explode(F.array(w0, w0 - 300000)).alias("w"), "value"
-    )
-    return hopped.groupBy("w").agg(
-        F.count("*").alias("n_events"),
-        _dec_sum(F.col("value")).alias("sum_value"),
-    ).select(
-        (F.col("w") / 1000).cast("long").alias("win_start_s"),
-        "n_events",
-        "sum_value",
-    )
-
-
-@q(
-    "q80_salted_hot_key_agg",
-    """
-    SELECT l_returnflag,
-           count(*) AS n_rows,
-           sum(CAST(l_quantity AS DECIMAL(18,2)))::double AS sum_qty,
-           sum(CAST(l_extendedprice AS DECIMAL(18,2)))::double AS sum_price
-    FROM lineitem GROUP BY l_returnflag
-    """,
-)
-def q80_salted_hot_key_agg(spark, sf_dir):
-    """Explicit two-phase SALTED aggregation over a pathologically hot key
-    (l_returnflag has 3 values — at 100 TB a naive groupBy sends a third
-    of the table to one reducer): phase 1 aggregates by (key, salt16)
-    where salt = pmod(xxhash64(l_orderkey), 16) spreads each hot key over
-    16 reducers; phase 2 merges the 48 partials. The oracle is the PLAIN
-    aggregate — proving salting is a pure execution-strategy rewrite with
-    bit-identical results (counts and decimal sums are mergeable states).
-    This is the manual fallback the AQE-skew plan tests cover adaptively;
-    streaming/structured pipelines that can't rely on AQE use this form.
-    """
-    li = t(spark, sf_dir, "lineitem")
-    salted = li.withColumn(
-        "salt", F.pmod(F.xxhash64("l_orderkey"), F.lit(16))
-    )
-    phase1 = salted.groupBy("l_returnflag", "salt").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("q"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("p"),
-    )
-    return phase1.groupBy("l_returnflag").agg(
-        F.sum("n").alias("n_rows"),
-        F.sum("q").cast("double").alias("sum_qty"),
-        F.sum("p").cast("double").alias("sum_price"),
     )

@@ -25,7 +25,6 @@ import random
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from kgforge.schemas import SOURCE_FILES
 

@@ -1,11 +1,12 @@
 """Training-data pipeline text operators over the ``documents`` table.
 
-First-class components for 100 TB corpus curation (task brief): exact and
-near deduplication, document fingerprinting, language-ID heuristics, quality
-scoring and token statistics — all pure Catalyst (whole-stage codegen, no
-Python), each with a DuckDB-expressible oracle in kgforge.queries.
+First-class components for 100 TB corpus curation (task brief): benchmark
+decontamination (exact and Bloom), MinHash document fingerprinting,
+language-ID heuristics, quality scoring and token statistics — all pure
+Catalyst (whole-stage codegen, no Python), each with a DuckDB-expressible
+oracle in kgforge.queries.
 
-Portability note: near-dup primitives hash with ``md5`` (identical hex in
+Portability note: the hashing primitives use ``md5`` (identical hex in
 Spark and DuckDB), so each one is oracle-checkable.
 """
 
@@ -85,7 +86,7 @@ def bloom_decontaminate_hits(
     ``depths * 16^hex_chars`` positions, here 3x4096).
 
     Bit positions are (depth, hex-prefix-of-md5) pairs — engine-portable
-    strings like q75's count-min buckets, so the whole sketch (including
+    strings (no binary sketch blob), so the whole sketch (including
     its deterministic false positives: that is the sketch contract, a
     superset never a miss) is reproducible in the DuckDB oracle and
     HASH-verified. Scale shape: the bit set is built from the tiny eval
@@ -140,90 +141,6 @@ def minhash_band_sig(shingle_arr: Column, band: int) -> Column:
             shingle_arr, lambda s: F.md5(F.concat(F.lit(f"b{band}|"), s))
         )
     )
-
-
-def simhash16(col: Column) -> Column:
-    """16-bit SimHash over tokens: bit b set iff sum(+/-1 per token) > 0,
-    where a token votes +1 on bit b when hex digit b of md5(token) is odd.
-
-    Teaching/Column form — 16 aggregate folds with md5 inline, so every
-    token is hashed 16 times. The production path is
-    ``with_simhash16_md5`` (r7): same result, ONE md5 per token with the
-    16 digit parities packed into a long that is materialized as a
-    projected array column, then 16 shift/mask folds. The hoist must be a
-    MATERIALIZED projection (a bound attribute), not a shared
-    subexpression: Catalyst does not CSE across aggregate lambdas, which
-    is why an earlier hoisted-md5-array variant inside one Column
-    expression was 3x slower.
-    IN-list digit parity is bit-identical in DuckDB.
-    """
-    toks = tokens(col)
-    odd_hex = ("1", "3", "5", "7", "9", "b", "d", "f")
-
-    def make_step(bit_pos: int):
-        # named closure keeps the pyspark lambda arity at exactly 2
-        def step(acc, tok):
-            return acc + F.when(
-                F.substring(F.md5(tok), bit_pos + 1, 1).isin(*odd_hex), F.lit(1)
-            ).otherwise(F.lit(-1))
-
-        return step
-
-    bits = []
-    for b in range(16):
-        vote = F.aggregate(toks, F.lit(0), make_step(b))
-        bits.append(F.when(vote > 0, F.lit(1 << b)).otherwise(F.lit(0)))
-    out = bits[0]
-    for e in bits[1:]:
-        out = out + e
-    return out
-
-
-def with_simhash16_md5(
-    df: DataFrame, text_col: str = "text", out: str = "simhash"
-) -> DataFrame:
-    """Production form of ``simhash16`` — bit-identical result (oracle-
-    hash-checked as q24), ONE md5 per token instead of 16.
-
-    Shape (r7, guide §1.2 step 2 'per-task work'): a nested transform
-    first hashes each token once (the inner ``md5`` binds to the outer
-    lambda's VARIABLE, so the two substring/conv references below are
-    free variable reads, not re-evaluations — higher-order-function
-    lambdas are interpreted with no common-subexpression elimination, so
-    any expression referenced twice inside one is computed twice); the
-    outer lambda packs the 16 hex-digit nibbles into one long
-    (``shiftleft(conv(hex[1:8]), 32) | conv(hex[9:16])`` — bit ops, no
-    ANSI overflow), materialized as an array projection. The 16 aggregate
-    folds then test the nibble LOW bit at position 4*(15-b) — digit b+1
-    of the md5 is odd iff that bit is set — so each fold is shift/mask
-    over a precomputed long."""
-    toks = tokens(F.col(text_col))
-    packed = F.transform(
-        F.transform(toks, lambda tk: F.md5(tk)),
-        lambda h: F.shiftleft(
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("long"), 32
-        ).bitwiseOR(F.conv(F.substring(h, 9, 8), 16, 10).cast("long")),
-    )
-    hashed = df.withColumn("_sh16_m", packed)
-
-    def make_step(b: int):
-        pos = 4 * (15 - b)  # low bit of hex digit b+1 within the packed long
-
-        def step(acc, m):
-            return acc + F.when(
-                F.shiftright(m, pos).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-            ).otherwise(F.lit(-1))
-
-        return step
-
-    bits = []
-    for b in range(16):
-        vote = F.aggregate(F.col("_sh16_m"), F.lit(0), make_step(b))
-        bits.append(F.when(vote > 0, F.lit(1 << b)).otherwise(F.lit(0)))
-    sig = bits[0]
-    for e in bits[1:]:
-        sig = sig + e
-    return hashed.withColumn(out, sig).drop("_sh16_m")
 
 
 def stopword_ratio(col: Column) -> Column:

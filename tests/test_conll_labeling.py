@@ -2,10 +2,6 @@
 
 from __future__ import annotations
 
-import glob
-
-from pyspark.sql import functions as F
-
 from kgforge.conll import read_conll, write_conll
 from kgforge.labeling import (
     corpus_stats,

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from kgforge import oracle
 from kgforge.extract import extract_mentions, regex_entities, with_clean
 from kgforge.synth import synth_rows, synth_source_files

@@ -81,26 +81,3 @@ def test_bloom_decontaminate_empty_eval_set(spark):
     )
     empty = corpus.filter(F.lit(False))
     assert textops.bloom_decontaminate_hits(corpus, empty, k=3).count() == 0
-
-
-def test_hopping_window_boundary_event(spark):
-    """An event exactly ON a window start belongs to that window and the
-    one before it — half-open [start, start+size) semantics on both
-    engines (floor division of an exact multiple)."""
-    import datetime
-
-    from kgforge.queries import REGISTRY
-    import os
-    import tempfile
-
-    ts = datetime.datetime(2024, 1, 1, 0, 10, 0)  # epoch multiple of 300s
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(
-            [(1, ts, 10, "view", 5.0, "{}")],
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string",
-        ).write.parquet(f"{d}/events.parquet")
-        rows = REGISTRY["q79_hopping_window"].fn(spark, d).collect()
-    starts = sorted(r.win_start_s for r in rows)
-    e = int(ts.replace(tzinfo=datetime.timezone.utc).timestamp())
-    assert starts == [e - 300, e]

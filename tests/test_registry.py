@@ -9,5 +9,5 @@ def test_registry_counts_match_docs():
     """ADVICE r3: COVERAGE.md and the README drifted to different query
     counts. The documented split lives HERE, once; update this test and
     both docs together when the registry changes."""
-    oracle = sum(1 for qd in REGISTRY.values() if qd.sql is not None)
-    assert (len(REGISTRY), oracle) == (61, 59), (len(REGISTRY), oracle)
+    oracle = sum(1 for qd in REGISTRY.values() if qd.sql)
+    assert (len(REGISTRY), oracle) == (45, 45), (len(REGISTRY), oracle)

@@ -1,7 +1,7 @@
 """Oracle gate at any scale.
 
-Runs every registry entry on Spark and, where it has oracle SQL, its
-DuckDB twin over the same parquet tables, through the same comparison the
+Runs every registry entry on Spark and its DuckDB twin (the entry's
+oracle SQL) over the same parquet tables, through the same comparison the
 tier-1 suite uses (``kgforge.queries.oracle_gate``): row count, column
 names, and an order-insensitive value multiset.
 
@@ -33,7 +33,7 @@ def main() -> int:
     con = oracle_gate.duckdb_views(sf_dir)
     only = set(args.only.split(",")) if args.only else None
 
-    n_pass = n_fail = n_rowsonly = 0
+    n_pass = n_fail = 0
     for name, entry in sorted(REGISTRY.items()):
         if only and name not in only:
             continue
@@ -46,17 +46,14 @@ def main() -> int:
             n_fail += 1
             continue
         dt = time.time() - t0
-        if entry.sql is None:
-            print(f"rows-only {name}: {n_rows} rows [{dt:.1f}s]")
-            n_rowsonly += 1
-        elif problems:
+        if problems:
             print(f"FAIL {name}: {'; '.join(problems)} [{dt:.1f}s]")
             n_fail += 1
         else:
             print(f"PASS {name}: {n_rows} rows [{dt:.1f}s]")
             n_pass += 1
 
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only")
+    print(f"\n{n_pass} pass, {n_fail} fail")
     return 1 if n_fail else 0
 
 
