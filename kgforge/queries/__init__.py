@@ -17,9 +17,9 @@ query, in definition order):
 
 - ``core``       registry spine: Q, REGISTRY, @q, t(), exact-sum helpers
 - ``relational`` q01-q17 (TPC-H-ish aggs, windows, joins, top-k)
-- ``corpus``     q25-q28/q47/q52-q54/q56-q57/q60-q65/q67/q69-q74/q76-q78/
-                 q81-q82 (range joins, mixing, quantization, decontam,
-                 CDC, funnel)
+- ``corpus``     q25-q28/q47-q48/q52-q54/q56-q57/q60-q65/q67/q69-q74/
+                 q76-q78/q81-q82 (range joins, mixing, quantization,
+                 decontam, length percentiles, CDC, funnel)
 - ``oracle_gate`` the Spark-vs-DuckDB comparison behind
                  tests/test_oracles.py and tools/check_oracles.py
 """

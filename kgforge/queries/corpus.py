@@ -1,8 +1,8 @@
 """Corpus/pretraining-pipeline operators: range joins (incl. the
 large-large grid path), temperature mixing, quantization, decontam,
-TF-IDF, quality/PII/repetition, CDC upsert, funnel, LOCF, keep-best
-dedup, cogroup, lang-id, fingerprints: q25-q28, q47, q52-q54, q56-q57,
-q60-q65, q67, q69-q74, q76-q78, q81-q82.
+TF-IDF, quality/PII/repetition, length percentiles, CDC upsert, funnel,
+LOCF, keep-best dedup, cogroup, lang-id, fingerprints: q25-q28,
+q47-q48, q52-q54, q56-q57, q60-q65, q67, q69-q74, q76-q78, q81-q82.
 
 Split from the monolithic queries.py in round 5 (VERDICT r4 #8);
 every (fn, sql) pair unchanged.
@@ -712,6 +712,31 @@ def q47_pii_redaction(spark, sf_dir):
         F.sum(F.when(redacted != F.col("text"), 1).otherwise(0)).alias(
             "n_redacted_docs"
         ),
+    )
+
+
+@q(
+    "q48_length_percentiles",
+    """
+    SELECT lang,
+           round(quantile_cont(n_chars, 0.5), 4) AS p50,
+           round(quantile_cont(n_chars, 0.9), 4) AS p90,
+           round(quantile_cont(n_chars, 0.99), 4) AS p99,
+           max(n_chars) AS max_chars
+    FROM documents GROUP BY lang
+    """,
+)
+def q48_length_percentiles(spark, sf_dir):
+    """Exact length percentiles per language (corpus QC): Spark
+    percentile() and DuckDB quantile_cont share the linear-interpolation
+    definition, so the oracle is exact. At 100 TB swap percentile_approx
+    (t-digest) in — deliberately NOT oracle'd (algorithm-dependent)."""
+    d = t(spark, sf_dir, "documents")
+    return d.groupBy("lang").agg(
+        F.round(F.percentile("n_chars", F.lit(0.5)), 4).alias("p50"),
+        F.round(F.percentile("n_chars", F.lit(0.9)), 4).alias("p90"),
+        F.round(F.percentile("n_chars", F.lit(0.99)), 4).alias("p99"),
+        F.max("n_chars").alias("max_chars"),
     )
 
 

@@ -10,4 +10,4 @@ def test_registry_counts_match_docs():
     counts. The documented split lives HERE, once; update this test and
     both docs together when the registry changes."""
     oracle = sum(1 for qd in REGISTRY.values() if qd.sql)
-    assert (len(REGISTRY), oracle) == (45, 45), (len(REGISTRY), oracle)
+    assert (len(REGISTRY), oracle) == (46, 46), (len(REGISTRY), oracle)
